@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** One-action fan-in for control-plane gauge scalars (optimization round
   * 17, guide §2.6 "overlap independent jobs" + §1.2 "remove passes").
@@ -71,4 +71,52 @@ private[graft] object Actions {
       r.getString(0) -> (if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
     }.toMap
   }
+
+  /** The recall numerator as a one-row gauge frame: how many of the
+    * exact (query_id, id) pairs the approximate answer also returned.
+    */
+  def hits(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.join(approx.select(col("query_id"), col("id")),
+      Seq("query_id", "id"), "left_semi").agg(count(lit(1)))
+
+  /** One invariant of a zero-row gate: it becomes an
+    * (invariant, expected, actual) row when `failed`.
+    */
+  final case class Check(failed: Boolean, invariant: String,
+                         expected: Double, actual: Double)
+
+  /** `actual` must equal `expected` (counts, diffs, version ids). */
+  def exactly(invariant: String, expected: Long, actual: Long): Check =
+    Check(actual != expected, invariant, expected.toDouble, actual.toDouble)
+
+  /** `actual` must not exceed `bound`. */
+  def atMost(invariant: String, bound: Long, actual: Long): Check =
+    Check(actual > bound, invariant, bound.toDouble, actual.toDouble)
+
+  /** `actual` must reach `floor` (recalls); both sides are reported
+    * rounded to 4 places.
+    */
+  def atLeast(invariant: String, floor: Double, actual: Double): Check =
+    Check(actual < floor, invariant, r4(floor), r4(actual))
+
+  /** A yes/no invariant, reported as expected 1, actual 0 when it fails. */
+  def holds(invariant: String, ok: Boolean): Check =
+    Check(!ok, invariant, 1.0, if (ok) 1.0 else 0.0)
+
+  private def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
+
+  /** Every check as a row, failed or not — a gate's persisted one-shot
+    * outcome, filtered to its failures when read back.
+    */
+  def checkRows(spark: SparkSession, checks: Seq[Check]): DataFrame = {
+    import spark.implicits._
+    checks.map(c => (c.invariant, c.expected, c.actual))
+      .toDF("invariant", "expected", "actual")
+  }
+
+  /** The zero-row gate result: one row per failed check, ordered by
+    * invariant. Zero rows is the passing state.
+    */
+  def violations(spark: SparkSession, checks: Check*): DataFrame =
+    checkRows(spark, checks.filter(_.failed)).orderBy("invariant")
 }

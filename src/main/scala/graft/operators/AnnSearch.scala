@@ -1964,7 +1964,6 @@ object AnnSearch {
                           nQueries: Int = 10, k: Int = 10,
                           recallFloor: Double = 0.5,
                           batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     // batchRows > 0 slices the fixture growth batch to its smallest
     // `batchRows` ids — the steady-state micro-batch shape for corpora
@@ -1994,18 +1993,11 @@ object AnnSearch {
     // ONE action for the scalar checks (r17: was three sequential jobs)
     val g = Actions.gauges(
       "n_out" -> ivfVectors(spark, out).agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(nOut != nBase + nBatch)(
-        ("vector_count", (nBase + nBatch).toDouble, nOut.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", nBase + nBatch, g("n_out").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
   /** HARD gate for the O(batch) IVF+PQ append — [[ivfAppendViolations]]'
@@ -2029,7 +2021,6 @@ object AnnSearch {
   def ivfPqAppendViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10,
                             recallFloor: Double = 0.35): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     val nk = Quantize.resolveCodes(spark, sfDir, 0)
     val m = Quantize.resolveM(spark, sfDir, 0)
@@ -2052,21 +2043,12 @@ object AnnSearch {
       "n_out" -> codes.agg(count(lit(1))),
       "bad_width" -> codes.filter(size(col("codes")) =!= m)
         .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val badWidth = g("bad_width").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(nOut != 2 * nBase)(
-        ("vector_count", 2.0 * nBase, nOut.toDouble)),
-      Option.when(badWidth != 0)(
-        ("code_width", 0.0, badWidth.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", 2 * nBase, g("n_out").toLong),
+      Actions.exactly("code_width", 0L, g("bad_width").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
   /** HARD gate for index REFIT — the lifecycle step after appends: an
@@ -2094,7 +2076,6 @@ object AnnSearch {
   def ivfRefitViolations(spark: SparkSession, sfDir: String,
                          nQueries: Int = 10, k: Int = 10,
                          eps: Double = 0.05): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     val appended = IndexStore.indexDir(sfDir, s"ivf$nc-refit-base-v2",
       "embeddings")
@@ -2114,28 +2095,20 @@ object AnnSearch {
     // the committed appended-corpus truth + ONE action for all six
     // scalar checks (r17: was six sequential jobs)
     val exact = appendUnionExact(spark, sfDir, union, nQueries, k)
-    def hitsAt(dir: String, p: Int): DataFrame =
-      exact.join(
-        ivfSearchAt(spark, dir, queries, k, p, nQueries.toLong)
-          .select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1)))
+    def hitsAt(dir: String, p: Int): DataFrame = Actions.hits(exact,
+      ivfSearchAt(spark, dir, queries, k, p, nQueries.toLong))
     val g = Actions.gauges(
       "n_appended" -> ivfVectors(spark, appended).agg(count(lit(1))),
       "n_refit" -> ivfVectors(spark, refit).agg(count(lit(1))),
       "hits_before" -> hitsAt(appended, resolveProbe(nc, 0)),
       "hits_after" -> hitsAt(refit, resolveProbe(nc2, 0)),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nAppended = g("n_appended").toLong
-    val nRefit = g("n_refit").toLong
-    val before = g("hits_before") / g("n_exact")
-    val after = g("hits_after") / g("n_exact")
-    val viols = Seq(
-      Option.when(nRefit != nAppended)(
-        ("vector_count", nAppended.toDouble, nRefit.toDouble)),
-      Option.when(after < before - eps)(
-        ("refit_recall", math.round((before - eps) * 10000.0) / 10000.0,
-          math.round(after * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", g("n_appended").toLong,
+        g("n_refit").toLong),
+      Actions.atLeast("refit_recall",
+        g("hits_before") / g("n_exact") - eps,
+        g("hits_after") / g("n_exact")))
   }
 
   /** HARD gate for CODEBOOK refit — [[ivfRefitViolations]]' contract
@@ -2165,7 +2138,6 @@ object AnnSearch {
   def ivfPqRefitViolations(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
                            eps: Double = 0.05): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     val nk = Quantize.resolveCodes(spark, sfDir, 0)
     val m = Quantize.resolveM(spark, sfDir, 0)
@@ -2203,20 +2175,14 @@ object AnnSearch {
     def recallOf(dir: String, probeN: Int, nkOf: Int): Double = {
       val approx = ivfPqSearchAt(spark, dir, queries, union, k, probeN,
         m, nkOf, rerank = 40, expectedQ = nQueries.toLong)
-      exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").count().toDouble / exact.count()
+      Actions.hits(exact, approx).head().getLong(0).toDouble / exact.count()
     }
     val before = recallOf(appended, resolveProbe(nc, 0), nk)
     val after = recallOf(refit, resolveProbe(nc2, 0), nk2)
-    val viols = Seq(
-      Option.when(nRefit != n2)(
-        ("vector_count", n2.toDouble, nRefit.toDouble)),
-      Option.when(badWidth != 0)(
-        ("code_width", 0.0, badWidth.toDouble)),
-      Option.when(after < before - eps)(
-        ("refit_recall", math.round((before - eps) * 10000.0) / 10000.0,
-          math.round(after * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", n2, nRefit),
+      Actions.exactly("code_width", 0L, badWidth),
+      Actions.atLeast("refit_recall", before - eps, after))
   }
 
   /** HARD gate for index DELETION — the lifecycle event between append
@@ -2242,7 +2208,6 @@ object AnnSearch {
   def ivfDeleteViolations(spark: SparkSession, sfDir: String,
                           nQueries: Int = 10, k: Int = 10,
                           recallFloor: Double = 0.5): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     // the SAME appended version the append gate builds (idempotent —
     // one append job serves both gates in a suite run)
@@ -2284,27 +2249,16 @@ object AnnSearch {
         .agg(count(lit(1))),
       "n_live" -> ivfLiveVectors(spark, deleted).agg(count(lit(1))),
       "n_compact" -> ivfVectors(spark, compacted).agg(count(lit(1))),
-      "hits" -> exact.join(
-        postCompact.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, postCompact),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val deletedInResults = g("deleted_in_results").toLong
-    val nLive = g("n_live").toLong
-    val nCompact = g("n_compact").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(nCompact != nLiveExpected)(
-        ("compact_count", nLiveExpected.toDouble, nCompact.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("post_compact_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    val nLiveExpected = 2 * nBase - g("n_del").toLong
+    Actions.violations(spark,
+      Actions.exactly("deleted_in_results", 0L,
+        g("deleted_in_results").toLong),
+      Actions.exactly("live_count", nLiveExpected, g("n_live").toLong),
+      Actions.exactly("compact_count", nLiveExpected, g("n_compact").toLong),
+      Actions.atLeast("post_compact_recall", recallFloor,
+        g("hits") / g("n_exact")))
   }
 
   /** HARD gate for IVF+PQ DELETION — [[ivfDeleteViolations]]' contract
@@ -2327,7 +2281,6 @@ object AnnSearch {
   def ivfPqDeleteViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10,
                             recallFloor: Double = 0.35): DataFrame = {
-    import spark.implicits._
     val nc = resolveClusters(spark, sfDir, 0)
     val nk = Quantize.resolveCodes(spark, sfDir, 0)
     val m = Quantize.resolveM(spark, sfDir, 0)
@@ -2362,23 +2315,14 @@ object AnnSearch {
       "n_live" -> excludeTombstoned(spark, deleted,
         IndexStore.readUnion(spark, ivfPqLayout(spark, deleted)._3))
         .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val deletedInResults = g("deleted_in_results").toLong
-    val nLive = g("n_live").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("deleted_in_results", 0L,
+        g("deleted_in_results").toLong),
+      Actions.exactly("live_count", 2 * nBase - g("n_del").toLong,
+        g("n_live").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
   /** Disk-committed exact truth over the APPENDED corpus (base ∪ the
@@ -2425,8 +2369,7 @@ object AnnSearch {
     val exact = exactOverride.getOrElse(unionExactTopK(union, queries, k))
     val approx = ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
     val g = Actions.gauges(
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
     g("hits") / g("n_exact")
   }
@@ -2583,7 +2526,6 @@ object AnnSearch {
   def hybridProbeViolations(spark: SparkSession, sfDir: String,
                             perLeg: Int = 50,
                             recallFloor: Double = 0.6): DataFrame = {
-    import spark.implicits._
     def legRecall(dir: String, queries: DataFrame, nc: Int,
                   expectedQ: Long): (Int, Double) = {
       val np = autoProbe(nc)
@@ -2591,9 +2533,8 @@ object AnnSearch {
         .select(col("query_id"), col("id")).localCheckpoint(true)
       val probed = ivfSearchAt(spark, dir, queries, perLeg, np, expectedQ)
         .select(col("query_id"), col("id"))
-      val hits = exact.join(probed, Seq("query_id", "id"), "left_semi")
-        .count()
-      (np, hits.toDouble / exact.count())
+      (np, Actions.hits(exact, probed).head().getLong(0).toDouble /
+        exact.count())
     }
     val docNc = autoClusters(tableCount(spark, sfDir, "documents"))
     val (docNp, hybridRecall) = legRecall(
@@ -2603,16 +2544,10 @@ object AnnSearch {
     val (embNp, mmrRecall) = legRecall(
       loadOrBuildIvf(spark, sfDir, embNc),
       queryVectors(spark, sfDir, 10), embNc, expectedQ = 10L)
-    def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
-    val viols = Seq(
-      Option.when(docNp >= docNc)(
-        ("hybrid_probe_saturated", (docNc - 1).toDouble, docNp.toDouble)),
-      Option.when(embNp >= embNc)(
-        ("mmr_probe_saturated", (embNc - 1).toDouble, embNp.toDouble)),
-      Option.when(hybridRecall < recallFloor)(
-        ("hybrid_leg_recall", recallFloor, r4(hybridRecall))),
-      Option.when(mmrRecall < recallFloor)(
-        ("mmr_pool_recall", recallFloor, r4(mmrRecall)))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.atMost("hybrid_probe_saturated", docNc - 1, docNp),
+      Actions.atMost("mmr_probe_saturated", embNc - 1, embNp),
+      Actions.atLeast("hybrid_leg_recall", recallFloor, hybridRecall),
+      Actions.atLeast("mmr_pool_recall", recallFloor, mmrRecall))
   }
 }

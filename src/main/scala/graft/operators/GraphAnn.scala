@@ -1431,7 +1431,6 @@ object GraphAnn {
   def graphRefitViolations(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
                            eps: Double = 0.05): DataFrame = {
-    import spark.implicits._
     val n = AnnSearch.embeddingCount(spark, sfDir)
     val deg = autoDegree(n)
     val appended = IndexStore.indexDir(sfDir, s"knngraph$deg-app-v5",
@@ -1452,9 +1451,6 @@ object GraphAnn {
       autoEf(2 * n), hops, expectedQ = nQueries.toLong)
     val refitBeam = graphSearchAt(spark, refit, queries, k,
       autoEf(2 * n), hops, expectedQ = nQueries.toLong)
-    def hitsOf(beam: DataFrame): DataFrame =
-      exact.join(beam.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1)))
     // ONE action for every scalar check (r17: was six sequential jobs —
     // [[Actions.gauges]]); the two beam traces still run their own
     // internal jobs first
@@ -1466,23 +1462,15 @@ object GraphAnn {
         .join(artifact(spark, refit, "graph").select("src").distinct(),
           Seq("src"), "left_anti")
         .agg(count(lit(1))),
-      "appended_hits" -> hitsOf(appendedBeam),
-      "refit_hits" -> hitsOf(refitBeam),
+      "appended_hits" -> Actions.hits(exact, appendedBeam),
+      "refit_hits" -> Actions.hits(exact, refitBeam),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nRefit = g("n_refit").toLong
-    val orphans = g("orphans").toLong
-    val appendedRecall = g("appended_hits") / g("n_exact")
-    val refitRecall = g("refit_hits") / g("n_exact")
-    def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
-    val viols = Seq(
-      Option.when(nRefit != 2 * n)(
-        ("vector_count", 2.0 * n, nRefit.toDouble)),
-      Option.when(orphans != 0L)(
-        ("orphan_nodes", 0.0, orphans.toDouble)),
-      Option.when(refitRecall < appendedRecall - eps)(
-        ("refit_recall", r4(appendedRecall - eps),
-          r4(refitRecall)))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", 2 * n, g("n_refit").toLong),
+      Actions.exactly("orphan_nodes", 0L, g("orphans").toLong),
+      Actions.atLeast("refit_recall",
+        g("appended_hits") / g("n_exact") - eps,
+        g("refit_hits") / g("n_exact")))
   }
 
   /** HARD gate for the graph DELETE lifecycle (zero rows = passing,
@@ -1505,7 +1493,6 @@ object GraphAnn {
   def graphDeleteViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10,
                             recallFloor: Double = 0.9): DataFrame = {
-    import spark.implicits._
     val n = AnnSearch.embeddingCount(spark, sfDir)
     val deg = autoDegree(n)
     val base = buildGraphIndex(spark, sfDir)
@@ -1552,25 +1539,15 @@ object GraphAnn {
         .join(dead.select(col("vec_id").as("dst")), Seq("dst"),
           "left_semi")
         .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val excluded = g("excluded").toLong
-    val nDead = g("n_dead").toLong
-    val liveN = g("live_n").toLong
-    val deadEdges = g("dead_src").toLong + g("dead_dst").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(excluded != 0L)(
-        ("excluded_in_results", 0.0, excluded.toDouble)),
-      Option.when(liveN != n - nDead)(
-        ("live_count", (n - nDead).toDouble, liveN.toDouble)),
-      Option.when(deadEdges != 0L)(
-        ("dead_edges", 0.0, deadEdges.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("excluded_in_results", 0L, g("excluded").toLong),
+      Actions.exactly("live_count", n - g("n_dead").toLong,
+        g("live_n").toLong),
+      Actions.exactly("dead_edges", 0L,
+        g("dead_src").toLong + g("dead_dst").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
   /** HARD gate for the graph append (zero rows = passing, typed zero-row
@@ -1595,7 +1572,6 @@ object GraphAnn {
                             nQueries: Int = 10, k: Int = 10,
                             recallFloor: Double = 0.9,
                             batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
     val n = AnnSearch.embeddingCount(spark, sfDir)
     val deg = autoDegree(n)
     // batchRows > 0 slices the fixture growth batch to its smallest
@@ -1649,24 +1625,13 @@ object GraphAnn {
         .select(col("src"), col("dst")).dropDuplicates("src", "dst")
         .groupBy("src").agg(count(lit(1)).as("d"))
         .agg(max(col("d"))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val orphans = g("orphans").toLong
-    val maxDeg = g("max_deg").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(nOut != n + bCount)(
-        ("vector_count", (n + bCount).toDouble, nOut.toDouble)),
-      Option.when(orphans != 0L)(
-        ("orphan_nodes", 0.0, orphans.toDouble)),
-      Option.when(maxDeg > degBound)(
-        ("max_degree", degBound.toDouble, maxDeg.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("vector_count", n + bCount, g("n_out").toLong),
+      Actions.exactly("orphan_nodes", 0L, g("orphans").toLong),
+      Actions.atMost("max_degree", degBound, g("max_deg").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
   /** HARD gate for the GRAPH flagships' genuinely approximate operating
@@ -1702,7 +1667,6 @@ object GraphAnn {
   def graphProbeViolations(spark: SparkSession, sfDir: String,
                            perLeg: Int = 50,
                            recallFloor: Double = 0.9): DataFrame = {
-    import spark.implicits._
     // per leg: checkpoint the exact truth, run the beam (its own internal
     // jobs), and RETURN the gauge frames — the two legs' four scalar
     // checks then fold into one action ([[Actions.gauges]], r17; was
@@ -1717,11 +1681,8 @@ object GraphAnn {
       val beamed = graphSearchAt(spark, dir, queries, perLeg, ef, hops,
           expectedQ = q)
         .select(col("query_id"), col("id"))
-      (ef,
-        exact.join(beamed, Seq("query_id", "id"), "left_semi")
-          .agg(count(lit(1))),
-        exact.agg(greatest(count(lit(1)), lit(1L))),
-        exact)
+      (ef, Actions.hits(exact, beamed),
+        exact.agg(greatest(count(lit(1)), lit(1L))), exact)
     }
     val nDoc = AnnSearch.tableCount(spark, sfDir, "documents")
     // the SAME normalized corpus the doc-space graph was built over
@@ -1745,18 +1706,12 @@ object GraphAnn {
       "emb_hits" -> embHits, "emb_den" -> embDen)
     Checkpoints.release(docExact)
     Checkpoints.release(embExact)
-    val hybridRecall = g("doc_hits") / g("doc_den")
-    val mmrRecall = g("emb_hits") / g("emb_den")
-    def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
-    val viols = Seq(
-      Option.when(docEf >= nDoc)(
-        ("hybrid_beam_saturated", (nDoc - 1).toDouble, docEf.toDouble)),
-      Option.when(embEf >= nEmb)(
-        ("mmr_beam_saturated", (nEmb - 1).toDouble, embEf.toDouble)),
-      Option.when(hybridRecall < recallFloor)(
-        ("hybrid_leg_recall", recallFloor, r4(hybridRecall))),
-      Option.when(mmrRecall < recallFloor)(
-        ("mmr_pool_recall", recallFloor, r4(mmrRecall)))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.atMost("hybrid_beam_saturated", nDoc - 1, docEf),
+      Actions.atMost("mmr_beam_saturated", nEmb - 1, embEf),
+      Actions.atLeast("hybrid_leg_recall", recallFloor,
+        g("doc_hits") / g("doc_den")),
+      Actions.atLeast("mmr_pool_recall", recallFloor,
+        g("emb_hits") / g("emb_den")))
   }
 }

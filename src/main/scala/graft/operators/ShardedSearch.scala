@@ -556,38 +556,6 @@ object ShardedSearch {
       VectorSearch.normalized(spark, sfDir), k)
   }
 
-  /** The zero-row shard-merge gate (`shard_merge_violations`):
-    *
-    *  1. `exact_shard_invariance_k1` / `_k4` — [[shardedKnn]] at K=1 and
-    *     K=[[DefaultShards]] bit-identical to the unsharded exact search
-    *     (symmetric-diff row count, expected 0);
-    *  2. `shard_coverage` — the K shard indexes together hold exactly
-    *     the corpus (sum of per-shard index rows = n);
-    *  3. `shard_disjoint` — no vec_id indexed by more than one shard;
-    *  4. `ann_sharded_saturated_identity` — saturated-probe
-    *     [[shardedIvfKnn]] bit-identical to the exact answer (the merge
-    *     theorem through the REAL index path, not just the one-plan
-    *     exact form);
-    *  5. `ann_sharded_recall` — default-probe (non-saturated)
-    *     [[shardedIvfKnn]] holds the IVF family recall floor;
-    *  6. `graph_shard_coverage` / 7. `graph_shard_disjoint` — the K
-    *     per-shard GRAPH indexes together hold exactly the corpus, no
-    *     node in two shards (round 16 — the graph family joins the
-    *     sharded topology);
-    *  8. `graph_sharded_recall` — [[shardedGraphKnn]] holds the
-    *     `knn_graph` family floor (a beam has no saturation trick, so
-    *     the merged answer's contract is the per-shard recall the
-    *     merge theorem's approximate half guarantees);
-    *  9. `pq_shard_coverage` / 10. `pq_shard_disjoint` /
-    *     11. `pq_sharded_recall` — the QUANTIZED family's sharded legs
-    *     (late round 17, [[buildShardedIvfPq]]): the K hash slices of
-    *     the shared-training code table cover the corpus disjointly,
-    *     and the merged default-probe ADC answer ([[shardedIvfPqKnn]])
-    *     holds the `ivf_pq` family floor.
-    *
-    * Passing state is zero rows; each violated invariant becomes one
-    * (invariant, expected, actual) row.
-    */
   /** The zero-row sharded-WRITE gate (`shard_append_violations`) — the
     * lifecycle half of the sharded story ([[shardMergeViolations]] pins
     * the read half): route the deterministic injection batch into the
@@ -611,7 +579,6 @@ object ShardedSearch {
     */
   def shardAppendViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10): DataFrame = {
-    import spark.implicits._
     val shards = DefaultShards
     val batch = AnnSearch.injectionBatch(spark, sfDir, 1, 0.04)
     val appended = appendToShards(spark, sfDir, batch, shards)
@@ -646,7 +613,7 @@ object ShardedSearch {
       .select(col("vec_id"))).reduce(_ unionAll _)
     // the injection batch is the full corpus re-based (rows = n,
     // fingerprint-cached) — control-plane, no count job
-    val want = 2.0 * AnnSearch.embeddingCount(spark, sfDir)
+    val want = 2 * AnnSearch.embeddingCount(spark, sfDir)
     val resharded = reshardIvf(spark, sfDir, appended, 2, "app1")
     val re = scatterGatherAt(spark, resharded, queries,
       union, k, nProbe = -1, expectedQ = nQueries.toLong)
@@ -682,9 +649,6 @@ object ShardedSearch {
     val rApprox = scatterGatherGraphAt(spark, gResharded, queries,
       union, k).select(col("query_id"), col("id"))
       .localCheckpoint(true)
-    def hitsFrame(approx: DataFrame): DataFrame =
-      exactPairs.join(approx, Seq("query_id", "id"), "left_semi")
-        .agg(count(lit(1)))
     val g = Actions.gauges(
       "sat_diff" -> symDiffFrame(sat),
       "coverage" -> ids.agg(count(lit(1))),
@@ -692,41 +656,27 @@ object ShardedSearch {
       "re_diff" -> symDiffFrame(re),
       "g_coverage" -> gIds.agg(count(lit(1))),
       "g_dups" -> dupFrame(gIds),
-      "g_hits" -> hitsFrame(gApprox),
+      "g_hits" -> Actions.hits(exactPairs, gApprox),
       "r_coverage" -> rIds.agg(count(lit(1))),
       "r_dups" -> dupFrame(rIds),
-      "r_hits" -> hitsFrame(rApprox),
+      "r_hits" -> Actions.hits(exactPairs, rApprox),
       "n_exact" -> exactPairs.agg(greatest(count(lit(1)), lit(1L))))
-    Seq(sat, re, gApprox, rApprox).foreach(Checkpoints.release)
-    val satDiff = g("sat_diff").toLong
-    val coverage = g("coverage")
-    val dupIds = g("dup_ids")
-    val reDiff = g("re_diff").toLong
-    val gCoverage = g("g_coverage")
-    val gDups = g("g_dups")
-    val gRecall = g("g_hits") / g("n_exact")
-    val rCoverage = g("r_coverage")
-    val rDups = g("r_dups")
-    val rRecall = g("r_hits") / g("n_exact")
-    val checks = Seq(
-      ("append_scatter_gather", 0.0, satDiff.toDouble),
-      ("append_coverage", want, coverage),
-      ("append_disjoint", 0.0, dupIds),
-      ("reshard_identity", 0.0, reDiff.toDouble),
-      ("graph_append_coverage", want, gCoverage),
-      ("graph_append_disjoint", 0.0, gDups),
-      ("graph_reshard_coverage", want, rCoverage),
-      ("graph_reshard_disjoint", 0.0, rDups))
-      .filter { case (_, wantV, got) => wantV != got } ++
-      (if (gRecall >= gFloor) Seq.empty
-       else Seq(("graph_append_recall", gFloor,
-         math.round(gRecall * 10000.0) / 10000.0))) ++
-      (if (rRecall >= gFloor) Seq.empty
-       else Seq(("graph_reshard_recall", gFloor,
-         math.round(rRecall * 10000.0) / 10000.0)))
-    Checkpoints.release(union)
-    Checkpoints.release(exact)
-    checks.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Seq(sat, re, gApprox, rApprox, union, exact)
+      .foreach(Checkpoints.release)
+    def n(gauge: String): Long = g(gauge).toLong
+    Actions.violations(spark,
+      Actions.exactly("append_scatter_gather", 0L, n("sat_diff")),
+      Actions.exactly("append_coverage", want, n("coverage")),
+      Actions.exactly("append_disjoint", 0L, n("dup_ids")),
+      Actions.exactly("reshard_identity", 0L, n("re_diff")),
+      Actions.exactly("graph_append_coverage", want, n("g_coverage")),
+      Actions.exactly("graph_append_disjoint", 0L, n("g_dups")),
+      Actions.exactly("graph_reshard_coverage", want, n("r_coverage")),
+      Actions.exactly("graph_reshard_disjoint", 0L, n("r_dups")),
+      Actions.atLeast("graph_append_recall", gFloor,
+        g("g_hits") / g("n_exact")),
+      Actions.atLeast("graph_reshard_recall", gFloor,
+        g("r_hits") / g("n_exact")))
   }
 
   /** The zero-row sharded-DELETE gate (`shard_delete_violations`) — the
@@ -759,7 +709,6 @@ object ShardedSearch {
     */
   def shardDeleteViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10): DataFrame = {
-    import spark.implicits._
     val shards = DefaultShards
     val base = buildShardedIvf(spark, sfDir, shards)
     val gBase = buildShardedGraph(spark, sfDir, shards)
@@ -788,19 +737,10 @@ object ShardedSearch {
     val gApprox = scatterGatherGraphAt(spark, gDeleted, queries, live, k)
       .localCheckpoint(true)
     // per-shard live frames unioned so the K counts fold into one gauge
-    val ivfLiveAll = deleted.map(d =>
-      AnnSearch.ivfLiveVectors(spark, d).select(lit(1L).as("one")))
-      .reduce(_ unionAll _)
-    val gLiveAll = gDeleted.map { d =>
-      val vecs = IndexStore.loadSegments(spark, d, "vectors")
-        .select(col("vec_id")).distinct()
-      val tsegs = IndexStore.manifestSegments(
-        IndexStore.readManifest(spark, d), "tombstones")
-      (if (tsegs.isEmpty) vecs
-       else vecs.join(IndexStore.readUnion(spark, tsegs)
-         .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti"))
-        .select(lit(1L).as("one"))
-    }.reduce(_ unionAll _)
+    def liveAll(f: IndexFamily, dirs: Seq[String]): DataFrame =
+      dirs.map(f.liveIds(spark, _)).reduce(_ unionAll _)
+    val ivfLiveAll = liveAll(IndexFamily.Ivf, deleted)
+    val gLiveAll = liveAll(IndexFamily.Graph, gDeleted)
     val exactPairs = exact.select(col("query_id"), col("id"))
     // ONE action for the seven scalar checks (r17: was ~12 sequential
     // jobs — the K per-shard live counts each had their own)
@@ -814,46 +754,63 @@ object ShardedSearch {
       "g_leaked" -> gApprox.join(delAsId, Seq("id"), "left_semi")
         .agg(count(lit(1))),
       "g_live" -> gLiveAll.agg(count(lit(1))),
-      "g_hits" -> exactPairs.join(
-        gApprox.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "g_hits" -> Actions.hits(exactPairs, gApprox),
       "n_exact" -> exactPairs.agg(greatest(count(lit(1)), lit(1L))),
       "n_del" -> delIds.agg(count(lit(1))))
+    Seq(delIds, live, exact, sg, gApprox).foreach(Checkpoints.release)
     val nDel = g("n_del").toLong
-    val ivfLeaked = g("ivf_leaked").toLong
-    val ivfDiff = g("ivf_diff").toLong
-    val ivfLive = g("ivf_live").toLong
-    val gLeaked = g("g_leaked").toLong
-    val gLive = g("g_live").toLong
-    val gRecall = g("g_hits") / g("n_exact")
-    val gFloor = AnnSearch.DefaultRecallFloors("knn_graph")
-    val wantLive = (n - nDel).toDouble
-    val checks = Seq(
-      ("delete_nonvacuous", 1.0, if (nDel > 0) 1.0 else 0.0),
-      ("ivf_delete_exclusion", 0.0, ivfLeaked.toDouble),
-      ("ivf_delete_scatter_gather", 0.0, ivfDiff.toDouble),
-      ("ivf_delete_live_count", wantLive, ivfLive.toDouble),
-      ("ivf_delete_untouched_shard", 1.0,
-        if (deleted(shards - 1) == base(shards - 1)) 1.0 else 0.0),
-      ("graph_delete_exclusion", 0.0, gLeaked.toDouble),
-      ("graph_delete_live_count", wantLive, gLive.toDouble),
-      ("graph_delete_untouched_shard", 1.0,
-        if (gDeleted(shards - 1) == gBase(shards - 1)) 1.0 else 0.0))
-      .filter { case (_, wantV, got) => wantV != got } ++
-      (if (gRecall >= gFloor) Seq.empty
-       else Seq(("graph_delete_recall", gFloor,
-         math.round(gRecall * 10000.0) / 10000.0)))
-    Checkpoints.release(delIds)
-    Checkpoints.release(live)
-    Checkpoints.release(exact)
-    Checkpoints.release(sg)
-    Checkpoints.release(gApprox)
-    checks.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.holds("delete_nonvacuous", nDel > 0),
+      Actions.exactly("ivf_delete_exclusion", 0L, g("ivf_leaked").toLong),
+      Actions.exactly("ivf_delete_scatter_gather", 0L, g("ivf_diff").toLong),
+      Actions.exactly("ivf_delete_live_count", n - nDel,
+        g("ivf_live").toLong),
+      Actions.holds("ivf_delete_untouched_shard",
+        deleted(shards - 1) == base(shards - 1)),
+      Actions.exactly("graph_delete_exclusion", 0L, g("g_leaked").toLong),
+      Actions.exactly("graph_delete_live_count", n - nDel,
+        g("g_live").toLong),
+      Actions.holds("graph_delete_untouched_shard",
+        gDeleted(shards - 1) == gBase(shards - 1)),
+      Actions.atLeast("graph_delete_recall",
+        AnnSearch.DefaultRecallFloors("knn_graph"),
+        g("g_hits") / g("n_exact")))
   }
 
+  /** The zero-row shard-merge gate (`shard_merge_violations`):
+    *
+    *  1. `exact_shard_invariance_k1` / `_k4` — [[shardedKnn]] at K=1 and
+    *     K=[[DefaultShards]] bit-identical to the unsharded exact search
+    *     (symmetric-diff row count, expected 0);
+    *  2. `shard_coverage` — the K shard indexes together hold exactly
+    *     the corpus (sum of per-shard index rows = n);
+    *  3. `shard_disjoint` — no vec_id indexed by more than one shard;
+    *  4. `ann_sharded_saturated_identity` — saturated-probe
+    *     [[shardedIvfKnn]] bit-identical to the exact answer (the merge
+    *     theorem through the REAL index path, not just the one-plan
+    *     exact form);
+    *  5. `ann_sharded_recall` — default-probe (non-saturated)
+    *     [[shardedIvfKnn]] holds the IVF family recall floor;
+    *  6. `graph_shard_coverage` / 7. `graph_shard_disjoint` — the K
+    *     per-shard GRAPH indexes together hold exactly the corpus, no
+    *     node in two shards (round 16 — the graph family joins the
+    *     sharded topology);
+    *  8. `graph_sharded_recall` — [[shardedGraphKnn]] holds the
+    *     `knn_graph` family floor (a beam has no saturation trick, so
+    *     the merged answer's contract is the per-shard recall the
+    *     merge theorem's approximate half guarantees);
+    *  9. `pq_shard_coverage` / 10. `pq_shard_disjoint` /
+    *     11. `pq_sharded_recall` — the QUANTIZED family's sharded legs
+    *     (late round 17, [[buildShardedIvfPq]]): the K hash slices of
+    *     the shared-training code table cover the corpus disjointly,
+    *     and the merged default-probe ADC answer ([[shardedIvfPqKnn]])
+    *     holds the `ivf_pq` family floor.
+    *
+    * Passing state is zero rows; each violated invariant becomes one
+    * (invariant, expected, actual) row.
+    */
   def shardMergeViolations(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10): DataFrame = {
-    import spark.implicits._
     // the shared disk-committed truth ([[AnnSearch.exactKnnAt]]) — the
     // identity and recall legs below re-read it instead of re-running
     // the brute force per gate
@@ -863,31 +820,25 @@ object ShardedSearch {
       val b = other.select("query_id", "id", "distance", "rn")
       a.exceptAll(b).count() + b.exceptAll(a).count()
     }
-    val n = AnnSearch.embeddingCount(spark, sfDir).toDouble
+    val n = AnnSearch.embeddingCount(spark, sfDir)
     val dirs = buildShardedIvf(spark, sfDir, DefaultShards)
     val shardIds = dirs.map(d => IndexStore.readCached(spark, s"$d/vectors")
       .select(col("vec_id"))).reduce(_ unionAll _)
-    val coverage = shardIds.count().toDouble
+    val coverage = shardIds.count()
     val dupIds = shardIds.groupBy("vec_id").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).count().toDouble
+      .filter(col("c") > 1).count()
     val exactPairs = exact.select(col("query_id"), col("id"))
     val approx = shardedIvfKnn(spark, sfDir, nQueries, k)
-      .select(col("query_id"), col("id"))
-    val recall = exactPairs.join(approx, Seq("query_id", "id"),
-      "left_semi").count().toDouble / math.max(1L, exactPairs.count())
     val floor = AnnSearch.DefaultRecallFloors("ivf")
     // the graph family's sharded legs (round 16)
     val gDirs = buildShardedGraph(spark, sfDir, DefaultShards)
     val gShardIds = gDirs.map(d =>
       IndexStore.loadSegments(spark, d, "vectors")
         .select(col("vec_id")).distinct()).reduce(_ unionAll _)
-    val gCoverage = gShardIds.count().toDouble
+    val gCoverage = gShardIds.count()
     val gDups = gShardIds.groupBy("vec_id").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).count().toDouble
+      .filter(col("c") > 1).count()
     val gApprox = shardedGraphKnn(spark, sfDir, nQueries, k)
-      .select(col("query_id"), col("id"))
-    val gRecall = exactPairs.join(gApprox, Seq("query_id", "id"),
-      "left_semi").count().toDouble / math.max(1L, exactPairs.count())
     val gFloor = AnnSearch.DefaultRecallFloors("knn_graph")
     // the QUANTIZED family's sharded legs (late round 17): the K code
     // slices together hold exactly the corpus (the trained quantizers
@@ -900,39 +851,37 @@ object ShardedSearch {
     val pqDirs = buildShardedIvfPq(spark, sfDir, DefaultShards)
     val pqIds = pqDirs.map(d => IndexStore.readCached(spark, s"$d/codes")
       .select(col("vec_id"))).reduce(_ unionAll _)
-    val pqCoverage = pqIds.count().toDouble
+    val pqCoverage = pqIds.count()
     val pqDups = pqIds.groupBy("vec_id").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).count().toDouble
+      .filter(col("c") > 1).count()
     val pqApprox = shardedIvfPqKnn(spark, sfDir, nQueries, k)
-      .select(col("query_id"), col("id"))
-    val pqRecall = exactPairs.join(pqApprox, Seq("query_id", "id"),
-      "left_semi").count().toDouble / math.max(1L, exactPairs.count())
     val pqFloor = AnnSearch.DefaultRecallFloors("ivf_pq")
-    val checks = Seq(
-      ("exact_shard_invariance_k1",
-        0.0, symDiff(shardedKnn(spark, sfDir, nQueries, k, 1)).toDouble),
-      ("exact_shard_invariance_k4",
-        0.0, symDiff(shardedKnn(spark, sfDir, nQueries, k,
-          DefaultShards)).toDouble),
-      ("shard_coverage", n, coverage),
-      ("shard_disjoint", 0.0, dupIds),
-      ("ann_sharded_saturated_identity",
-        0.0, symDiff(shardedIvfKnn(spark, sfDir, nQueries, k,
-          DefaultShards, nProbe = -1)).toDouble),
-      ("graph_shard_coverage", n, gCoverage),
-      ("graph_shard_disjoint", 0.0, gDups),
-      ("pq_shard_coverage", n, pqCoverage),
-      ("pq_shard_disjoint", 0.0, pqDups))
-      .filter { case (_, want, got) => want != got } ++
-      (if (recall >= floor) Seq.empty
-       else Seq(("ann_sharded_recall", floor,
-         math.round(recall * 10000.0) / 10000.0))) ++
-      (if (gRecall >= gFloor) Seq.empty
-       else Seq(("graph_sharded_recall", gFloor,
-         math.round(gRecall * 10000.0) / 10000.0))) ++
-      (if (pqRecall >= pqFloor) Seq.empty
-       else Seq(("pq_sharded_recall", pqFloor,
-         math.round(pqRecall * 10000.0) / 10000.0)))
-    checks.toDF("invariant", "expected", "actual").orderBy("invariant")
+    // the three recall numerators and their shared denominator in ONE
+    // action ([[Actions.gauges]])
+    val g = Actions.gauges(
+      "hits" -> Actions.hits(exactPairs, approx),
+      "g_hits" -> Actions.hits(exactPairs, gApprox),
+      "pq_hits" -> Actions.hits(exactPairs, pqApprox),
+      "n_exact" -> exactPairs.agg(greatest(count(lit(1)), lit(1L))))
+    Actions.violations(spark,
+      Actions.exactly("exact_shard_invariance_k1", 0L,
+        symDiff(shardedKnn(spark, sfDir, nQueries, k, 1))),
+      Actions.exactly("exact_shard_invariance_k4", 0L,
+        symDiff(shardedKnn(spark, sfDir, nQueries, k, DefaultShards))),
+      Actions.exactly("shard_coverage", n, coverage),
+      Actions.exactly("shard_disjoint", 0L, dupIds),
+      Actions.exactly("ann_sharded_saturated_identity", 0L,
+        symDiff(shardedIvfKnn(spark, sfDir, nQueries, k, DefaultShards,
+          nProbe = -1))),
+      Actions.exactly("graph_shard_coverage", n, gCoverage),
+      Actions.exactly("graph_shard_disjoint", 0L, gDups),
+      Actions.exactly("pq_shard_coverage", n, pqCoverage),
+      Actions.exactly("pq_shard_disjoint", 0L, pqDups),
+      Actions.atLeast("ann_sharded_recall", floor,
+        g("hits") / g("n_exact")),
+      Actions.atLeast("graph_sharded_recall", gFloor,
+        g("g_hits") / g("n_exact")),
+      Actions.atLeast("pq_sharded_recall", pqFloor,
+        g("pq_hits") / g("n_exact")))
   }
 }

@@ -104,27 +104,24 @@ object TextSearch {
     val qh: Long =
       if (maxRow.isNullAt(0)) 0L // empty corpus: no gram matches below
       else {
-        val cMax = maxRow.getLong(0)
-        val tied = counts.filter(col("c") === cMax)
-          .select(col("h")).collect().map(_.getLong(0)).toSeq
-        if (tied.size == 1) tied.head
-        else {
-          // resolve ONLY the tied hashes to gram strings (one occurrence
-          // per hash suffices — all occurrences of a hash are the same
-          // gram w.h.p.) and take the oracle's lexicographic minimum in
-          // Spark's own string ordering
-          val occ = slim.filter(col("h").isin(tied: _*))
-            .groupBy(col("h"))
-            .agg(min(struct(col("doc_id"), col("pos"))).as("o"))
-            .select(col("h"), col("o").getField("doc_id").as("doc_id"),
-              col("o").getField("pos").as("pos"))
-          occ.join(corpus, "doc_id")
-            .select(col("h"), concat_ws(" ",
-              slice(split(col("text"), " "), col("pos") + 1, lit(n)))
-              .as("gram"))
-            .orderBy(col("gram")).limit(1)
-            .select(col("h")).head.getLong(0)
-        }
+        // resolve ONLY the hashes tied at the max count to gram strings
+        // (one occurrence per hash suffices — all occurrences of a hash
+        // are the same gram w.h.p.) and take the oracle's lexicographic
+        // minimum in Spark's own string ordering. The tied set stays a
+        // frame: on an all-distinct corpus every gram ties at count 1
+        val tied = counts.filter(col("c") === maxRow.getLong(0))
+          .select(col("h"))
+        slim.join(tied, Seq("h"), "left_semi")
+          .groupBy(col("h"))
+          .agg(min(struct(col("doc_id"), col("pos"))).as("o"))
+          .select(col("h"), col("o").getField("doc_id").as("doc_id"),
+            col("o").getField("pos").as("pos"))
+          .join(corpus, "doc_id")
+          .select(col("h"), concat_ws(" ",
+            slice(split(col("text"), " "), col("pos") + 1, lit(n)))
+            .as("gram"))
+          .orderBy(col("gram")).limit(1)
+          .select(col("h")).head().getLong(0)
       }
     Checkpoints.release(counts)
     slim.filter(col("h") === qh)

@@ -409,7 +409,6 @@ object TimeTravel {
     */
   def asofViolations(spark: SparkSession, sfDir: String,
                      nQueries: Int = 10, k: Int = 10): DataFrame = {
-    import spark.implicits._
     val root = ensureChain(spark, sfDir)
     val v0Frozen = s"$root/v0_asof_frozen"
     if (!IndexStore.committed(v0Frozen))
@@ -554,63 +553,30 @@ object TimeTravel {
         scatterGatherChainAt(spark, sRetRoots, sfDir, 2, nQueries, k)))
     Seq(v0Live, v1, gV0Live, sV0Live, sgV0Live)
       .foreach(Checkpoints.release)
-    val drift = g("drift").toLong
-    val leaked = g("leaked").toLong
-    val compactDrift = g("compact_drift").toLong
-    val advanced = g("advanced").toLong
-    val survivorDrift =
-      g("survivor_drift_1").toLong + g("survivor_drift_2").toLong
-    val gDrift = g("g_drift").toLong
-    val gLeaked = g("g_leaked").toLong
-    val gAdvanced = g("g_advanced").toLong
-    val sIdentity = g("s_identity").toLong
-    val sDrift = g("s_drift").toLong
-    val sLeaked = g("s_leaked").toLong
-    val sAdvanced = g("s_advanced").toLong
-    val sgDrift = g("sg_drift").toLong
-    val sgLeaked = g("sg_leaked").toLong
-    val sgAdvanced = g("sg_advanced").toLong
-    val sSurvivorDrift =
-      g("s_survivor_drift_1").toLong + g("s_survivor_drift_2").toLong
-
-    val viols = Seq(
-      Option.when(drift != 0L)(
-        ("historical_invariance", 0.0, drift.toDouble)),
-      Option.when(leaked != 0L)(
-        ("historical_isolation", 0.0, leaked.toDouble)),
-      Option.when(compactDrift != 0L)(
-        ("compaction_transparency", 0.0, compactDrift.toDouble)),
-      Option.when(advanced == 0L)(
-        ("latest_advances", 1.0, 0.0)),
-      Option.when(refused != 1.0)(
-        ("retention_asof_refusal", 1.0, refused)),
-      Option.when(survivorDrift != 0L)(
-        ("retention_survivor_invariance", 0.0, survivorDrift.toDouble)),
-      Option.when(gDrift != 0L)(
-        ("graph_historical_invariance", 0.0, gDrift.toDouble)),
-      Option.when(gLeaked != 0L)(
-        ("graph_historical_isolation", 0.0, gLeaked.toDouble)),
-      Option.when(gAdvanced == 0L)(
-        ("graph_latest_advances", 1.0, 0.0)),
-      Option.when(sIdentity != 0L)(
-        ("sharded_asof_identity", 0.0, sIdentity.toDouble)),
-      Option.when(sDrift != 0L)(
-        ("sharded_historical_invariance", 0.0, sDrift.toDouble)),
-      Option.when(sLeaked != 0L)(
-        ("sharded_historical_isolation", 0.0, sLeaked.toDouble)),
-      Option.when(sAdvanced == 0L)(
-        ("sharded_latest_advances", 1.0, 0.0)),
-      Option.when(sgDrift != 0L)(
-        ("sharded_graph_historical_invariance", 0.0, sgDrift.toDouble)),
-      Option.when(sgLeaked != 0L)(
-        ("sharded_graph_historical_isolation", 0.0, sgLeaked.toDouble)),
-      Option.when(sgAdvanced == 0L)(
-        ("sharded_graph_latest_advances", 1.0, 0.0)),
-      Option.when(sRefused != 1.0)(
-        ("sharded_retention_refusal", 1.0, sRefused)),
-      Option.when(sSurvivorDrift != 0L)(
-        ("sharded_retention_survivor_invariance", 0.0,
-          sSurvivorDrift.toDouble))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    def zero(invariant: String, gauges: String*): Actions.Check =
+      Actions.exactly(invariant, 0L, gauges.map(g(_).toLong).sum)
+    def advances(invariant: String, gauge: String): Actions.Check =
+      Actions.holds(invariant, g(gauge).toLong != 0L)
+    Actions.violations(spark,
+      zero("historical_invariance", "drift"),
+      zero("historical_isolation", "leaked"),
+      zero("compaction_transparency", "compact_drift"),
+      advances("latest_advances", "advanced"),
+      Actions.holds("retention_asof_refusal", refused == 1.0),
+      zero("retention_survivor_invariance",
+        "survivor_drift_1", "survivor_drift_2"),
+      zero("graph_historical_invariance", "g_drift"),
+      zero("graph_historical_isolation", "g_leaked"),
+      advances("graph_latest_advances", "g_advanced"),
+      zero("sharded_asof_identity", "s_identity"),
+      zero("sharded_historical_invariance", "s_drift"),
+      zero("sharded_historical_isolation", "s_leaked"),
+      advances("sharded_latest_advances", "s_advanced"),
+      zero("sharded_graph_historical_invariance", "sg_drift"),
+      zero("sharded_graph_historical_isolation", "sg_leaked"),
+      advances("sharded_graph_latest_advances", "sg_advanced"),
+      Actions.holds("sharded_retention_refusal", sRefused == 1.0),
+      zero("sharded_retention_survivor_invariance",
+        "s_survivor_drift_1", "s_survivor_drift_2"))
   }
 }

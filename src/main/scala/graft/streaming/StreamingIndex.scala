@@ -7,7 +7,9 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.VectorOps.l2Normalize
+import graft.functions.VectorOps.{l2Normalize, squaredL2}
+import graft.operators.{Actions, AnnSearch, Checkpoints, IndexFamily,
+  ShardedSearch, VectorSearch}
 import graft.sources.IndexStore
 
 /** The reference's ingest endpoint (`POST /add_drawing`,
@@ -74,6 +76,14 @@ object StreamingIndex {
   val VectorSchema: StructType = StructType(Seq(
     StructField("faiss_id", LongType),
     StructField("v", ArrayType(DoubleType))))
+
+  /** Landing schemas of the streamed vector chains and document folds. */
+  private val VectorBatchSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("v", ArrayType(DoubleType))))
+  private val DocBatchSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType)))
 
   /** Highest fully-committed index version under `root` below `limit`
     * (exclusive). A version is committed iff its MANIFEST is — the
@@ -260,26 +270,9 @@ object StreamingIndex {
                       ckptDir: String,
                       maxSegments: Int =
                         IndexStore.DefaultMaxSegments): Unit = {
-    val q = spark.readStream.schema(BatchSchema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row],
-                       batchId: Long) =>
-        // checkpoint/root consistency: batch ids only ever grow under one
-        // checkpoint, so a committed version STRICTLY ABOVE this batch id
-        // means the checkpoint was lost/cleared (ids restarted) or points
-        // at a different root — folding from an empty/stale base here
-        // would silently rewrite history under readers. Fail loudly
-        // instead. (== batchId is a legitimate crash-replay of this very
-        // batch and rewrites deterministically.)
-        latestVersion(root).filter(_ > batchId).foreach { v =>
-          throw new IllegalStateException(
-            s"index root $root has committed version v$v > batch $batchId" +
-              ": checkpoint/root mismatch (lost checkpoint or wrong dir)" +
-              " — refusing to rewrite history")
-        }
-        val prevVer = latestVersion(root, limit = batchId)
+    runChain(spark, srcDir, BatchSchema, ckptDir, filesPerTrigger = 0) {
+      (batch, batchId) =>
+        val prevVer = predecessor(root, batchId)
         val prev = prevVer
           .map(v => IndexStore.readManifest(spark, s"$root/v$v"))
           .getOrElse(Seq.empty)
@@ -317,7 +310,7 @@ object StreamingIndex {
           // committed — the fold's working checkpoint is dead; release
           // now rather than one generation per trigger until a GC
           // ([[graft.operators.Checkpoints]])
-          graft.operators.Checkpoints.release(resolved)
+          Checkpoints.release(resolved)
         } else {
           // the batch's OWN segments only — O(batch) files per version
           IndexStore.saveDataset(delta, mSeg)
@@ -328,11 +321,62 @@ object StreamingIndex {
             prev ++ Seq(("mapping", mSeg, batchId),
               ("vectors", vSeg, batchId)))
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    }
   }
+
+  /** The one checkpointed micro-batch runner of every streamed chain:
+    * read the parquet files landing in `landing` (`filesPerTrigger` per
+    * micro-batch; 0 = everything available in one), fold each batch
+    * with its checkpointed batch id, and stop once the landing dir is
+    * drained (Trigger.AvailableNow). A failure goes through
+    * [[wipeIfMisordered]] with the checkpoint's parent as the chain root
+    * — every chain lays out root/{landing,ckpt,…}, and only the
+    * order-disciplined folds throw the refusal that wipes it.
+    */
+  private def runChain(spark: SparkSession, landing: String,
+                       schema: StructType, ckpt: String,
+                       filesPerTrigger: Int = 1)
+                      (fold: (DataFrame, Long) => Unit): Unit = {
+    val src = spark.readStream.schema(schema)
+    val q = (if (filesPerTrigger > 0)
+               src.option("maxFilesPerTrigger", filesPerTrigger.toLong)
+             else src)
+      .parquet(landing)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
+                       batchId: Long) => fold(b, batchId) }
+      .start()
+    try q.awaitTermination() catch {
+      case e: Throwable =>
+        wipeIfMisordered(new Path(ckpt).getParent.toString, e)
+    }
+  }
+
+  /** The predecessor version a replayable fold of batch `batchId` reads:
+    * the newest committed under `root` below the batch id. Batch ids
+    * only ever grow under one checkpoint, so a committed version
+    * STRICTLY ABOVE this batch id means the checkpoint was lost/cleared
+    * (ids restarted) or points at a different root — folding from an
+    * empty/stale base would silently rewrite history under readers, so
+    * the fold fails loudly instead. (== batchId is a legitimate
+    * crash-replay of this very batch and rewrites deterministically.)
+    */
+  private def predecessor(root: String, batchId: Long): Option[Long] = {
+    latestVersion(root).filter(_ > batchId).foreach { v =>
+      throw new IllegalStateException(
+        s"index root $root has committed version v$v > batch $batchId" +
+          ": checkpoint/root mismatch (lost checkpoint or wrong dir)" +
+          " — refusing to rewrite history")
+    }
+    latestVersion(root, limit = batchId)
+  }
+
+  /** [[predecessor]]'s version dir, or `base` for a chain's first batch. */
+  private def predecessorDir(root: String, batchId: Long,
+                             base: String): String =
+    predecessor(root, batchId).map(v => s"$root/v$v").getOrElse(base)
 
   /** The read side of the streamed lifecycle — the reference's
     * `POST /search_drawing` (`main.py:138-165`) against the latest
@@ -344,7 +388,6 @@ object StreamingIndex {
     */
   def searchLatest(spark: SparkSession, root: String, query: Seq[Double],
                    k: Int = 10): DataFrame = {
-    import graft.functions.VectorOps.squaredL2
     // the store holds COMMITTED snapshots only; an absent/uncommitted
     // version degrades to the empty schema'd frames
     def empty(schema: StructType) = spark.createDataFrame(
@@ -477,7 +520,7 @@ object StreamingIndex {
     IndexStore.writeManifest(spark, s"$out/v0",
       Seq(("mapping", mSeg, 0L), ("vectors", vSeg, 0L)))
     // committed — the compaction's working checkpoint is dead
-    graft.operators.Checkpoints.release(raw)
+    Checkpoints.release(raw)
   }
 
   /** Stage `df` as flat `<prefix>-<i>.parquet` files inside the landing
@@ -665,793 +708,382 @@ object StreamingIndex {
       stageInto(batch.filter(col("doc_id") % 2 =!= 0), landing, "batch1")
       val corpusBands = spark.read.parquet(s"$corpusDir/bands")
       val corpusSh = spark.read.parquet(s"$corpusDir/shingles")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          Dedup.dedupBatchAgainstIndex(corpusBands, corpusSh,
-              Dedup.shingleTable(Dedup.shingles(b.toDF())), threshold)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$results/b$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, DocBatchSchema, s"$root/ckpt") { (b, batchId) =>
+        Dedup.dedupBatchAgainstIndex(corpusBands, corpusSh,
+            Dedup.shingleTable(Dedup.shingles(b)), threshold)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$results/b$batchId")
+      }
     }
     spark.read.parquet(s"$results/b*").orderBy("new_doc", "dup_of")
   }
 
-  /** Streaming O(batch) ANN index growth: micro-batches of NEW vectors
-    * are chained into versioned IVF snapshots —
-    * v(n) = [[graft.operators.AnnSearch.appendToIvfIndexAt]](v(n-1),
-    * batch n) — under one checkpoint, with the same replay discipline as
-    * [[ingestAvailable]] (predecessor resolved below the batch id; a
-    * committed version above the batch id means a lost checkpoint and
-    * fails loudly; a replayed batch rewrites its own version from the
-    * same predecessor). Each version costs O(batch) in BOTH compute and
-    * I/O: untouched cluster segments are re-referenced by the version's
-    * manifest, only the batch is assigned and written.
-    *
-    * Returns the zero-row violations contract (same shape as
-    * `ivf_append_violations`): rows appear if the version chain is
-    * incomplete, the final version's vector count is not base + both
-    * batches, or probing the final version misses the recall floor
-    * against the exact k-NN over the full appended corpus.
+  /** The streamed vector growth fixture: id-ceiling-windowed injection
+    * waves ([[graft.operators.AnnSearch.injectionBatch]] — collision-
+    * free on sparse blowup id spaces, unlike fixed offsets) of `bSize`
+    * rows each, one per shift in `deltas`.
     */
-  /** Streaming O(batch) GRAPH index growth — the graph-family twin of
-    * [[streamingIvfAppend]]: micro-batches of NEW vectors chain into
-    * versioned k-NN-graph snapshots,
-    * v(n) = [[graft.operators.GraphAnn.appendToGraphIndexAt]](v(n-1),
-    * batch n), under one checkpoint with the same replay discipline
-    * (predecessor resolved below the batch id; a committed version
-    * above the batch id is a lost checkpoint and fails loudly; a
-    * replayed batch rewrites its own version from the same
-    * predecessor). Each version costs O(batch): the batch beam-searches
-    * the PREDECESSOR graph for its forward edges, reverse edges repair
-    * only touched nodes, and the manifest re-references every base
-    * segment — the chained form of `main.py:134`'s `add_with_ids` for
-    * the graph layout.
-    *
-    * Returns the zero-row violations contract (`graph_append_violations`
-    * shape): version chain complete, final vector count = base + both
-    * batches, beam-search recall on the final version ≥ floor against
-    * the exact k-NN over the grown corpus.
+  private final case class Growth(nBase: Long, bSize: Long,
+                                  waves: Seq[DataFrame]) {
+    def grownN: Long = nBase + waves.size * bSize
+  }
+
+  /** `batchRows` > 0 pins the wave size (the deep×wide tier's
+    * steady-state micro-batch shape); otherwise a wave is the corpus
+    * over `batchDiv` — the whole corpus for IVF, a fifth for the graph
+    * (the INCREMENTAL beam-link side of its append regime switch, which
+    * is what a streamed ingest is; corpus-sized batches take the
+    * rebuild side, gated by `graph_append_violations`).
     */
-  def streamingGraphAppend(spark: SparkSession, sfDir: String,
-                           nQueries: Int = 10, k: Int = 10,
-                           recallFloor: Double = 0.9,
-                           batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn}
-    // `batchRows` > 0 pins the per-trigger batch size (the deep×wide
-    // tier's steady-state micro-batch shape) and keys a SEPARATE chain
-    // root — a fixture's default-shape chain must not short-circuit a
-    // differently-shaped run's counts
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-graph-b$batchRows-v6"
-      else "stream-graph-v6", "embeddings")
-    val landing = s"$root/landing"
-    // per-trigger batches default to a FIFTH of the corpus — the
-    // streamed twin exercises the INCREMENTAL (beam-link) side of the
-    // append regime switch, which is what a streamed ingest is;
-    // corpus-sized doubling batches take the rebuild side and are gated
-    // by `graph_append_violations` instead ([[GraphAnn.appendRebuilds]]).
-    // Batches come from the shared id-ceiling-windowed injection
-    // fixture ([[AnnSearch.injectionBatch]] — collision-free on sparse
-    // blowup id spaces, unlike fixed offsets)
-    val nEmb = AnnSearch.embeddingCount(spark, sfDir)
+  private def growth(spark: SparkSession, sfDir: String, batchDiv: Long,
+                     batchRows: Long,
+                     deltas: Seq[Double] = Seq(0.01, 0.02)): Growth = {
+    val nBase = AnnSearch.embeddingCount(spark, sfDir)
     val bSize =
-      if (batchRows > 0L) math.min(batchRows, nEmb)
-      else math.max(1L, nEmb / 5L)
-    def shifted(k: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, k, delta, rows = bSize)
+      if (batchRows > 0L) math.min(batchRows, nBase)
+      else math.max(1L, nBase / batchDiv)
+    // a corpus-sized wave is the whole corpus re-based, never sliced
+    val rows = if (bSize >= nBase) 0L else bSize
+    Growth(nBase, bSize, deltas.zipWithIndex.map { case (d, i) =>
+      AnnSearch.injectionBatch(spark, sfDir, i + 1, d, rows = rows)
+    })
+  }
+
+  /** The fixture corpus plus `waves`, normalized exactly as the index
+    * stores them — the exact truth's corpus.
+    */
+  private def grownCorpus(spark: SparkSession, sfDir: String,
+                          waves: Seq[DataFrame]): DataFrame =
+    waves.foldLeft(AnnSearch.normalizedCorpus(spark, sfDir)) { (u, w) =>
+      u.unionAll(w.select(col("vec_id"), l2Normalize(col("v")).as("v")))
+    }
+
+  /** A chain root name; a pinned `batchRows` keys a SEPARATE root, so a
+    * fixture's default-shape chain never short-circuits a differently
+    * shaped run's counts.
+    */
+  private def chainName(prefix: String, version: String,
+                        batchRows: Long): String =
+    if (batchRows > 0L) s"$prefix-b$batchRows-$version"
+    else s"$prefix-$version"
+
+  /** Fold every file staged under `root/landing` into `f`'s version
+    * chain at `root`, one checkpointed O(batch) append per trigger:
+    * v(n) = appendAt(v(n-1), batch n), starting from `base`.
+    */
+  private[graft] def appendChain(spark: SparkSession, f: IndexFamily,
+                                 root: String, base: String): Unit =
+    runChain(spark, s"$root/landing", VectorBatchSchema, s"$root/ckpt") {
+      (b, batchId) =>
+        f.appendAt(spark, predecessorDir(root, batchId, base), b,
+          s"$root/v$batchId")
+    }
+
+  /** Streaming O(batch) index growth, for either family: two
+    * micro-batches of NEW vectors chain into versioned snapshots,
+    * v(n) = appendAt(v(n-1), batch n), under one checkpoint with the
+    * [[ingestAvailable]] replay discipline ([[predecessor]]). Each
+    * version costs O(batch) in compute and I/O: IVF assigns only the
+    * batch and re-references untouched cluster segments; the graph
+    * beam-searches the PREDECESSOR for the batch's forward edges,
+    * repairs only touched nodes' reverse edges, and re-references every
+    * base segment — the chained form of `main.py:134`'s `add_with_ids`.
+    *
+    * Per family: the default batch is the whole corpus for IVF
+    * (recall floor 0.5) and a fifth of it for the graph (floor 0.9);
+    * see [[growth]]. Returns the zero-row violations contract
+    * (`ivf_append_violations` / `graph_append_violations` shape): the
+    * chain reached v1, the final version holds base + both batches,
+    * and searching it holds the recall floor against the exact k-NN
+    * over the grown corpus.
+    */
+  private def streamingAppend(spark: SparkSession, sfDir: String,
+                              f: IndexFamily, prefix: String,
+                              version: String, batchDiv: Long,
+                              nQueries: Int, k: Int, recallFloor: Double,
+                              batchRows: Long): DataFrame = {
+    val root = IndexStore.indexDir(sfDir,
+      chainName(prefix, version, batchRows), "embeddings")
+    val grown = growth(spark, sfDir, batchDiv, batchRows)
     if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId)
-            .foreach { v =>
-              throw new IllegalStateException(
-                s"graph root $root has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          GraphAnn.appendToGraphIndexAt(spark, baseDir, b.toDF(),
-            s"$root/v$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      val base = f.base(spark, sfDir)
+      stageInto(grown.waves(0), s"$root/landing", "batch0")
+      stageInto(grown.waves(1), s"$root/landing", "batch1")
+      appendChain(spark, f, root, base)
     }
     val vLast = latestVersion(root).getOrElse(-1L)
     val finalDir = s"$root/v$vLast"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
     // disk-committed streamed-corpus truth (shared with the sharded
-    // graph chain — same injection slices) + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = GraphAnn.graphSearchAt(spark, finalDir, queries, k,
-      GraphAnn.autoEf(nBase + 2 * bSize),
-      GraphAnn.autoHops(nBase + 2 * bSize, GraphAnn.autoDegree(nBase)),
-      expectedQ = nQueries.toLong)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> IndexStore.loadSegments(spark, finalDir, "vectors")
-        .agg(countDistinct(col("vec_id"))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+    // graph chain — same injection slices) + ONE action for the checks
+    val exact = AnnSearch.appendUnionExact(spark, sfDir,
+      grownCorpus(spark, sfDir, grown.waves), nQueries, k,
+      batchTag = s"-sinj${grown.bSize}")
+    val approx = f.searchAt(spark, sfDir, finalDir,
+      AnnSearch.fixtureQueries(spark, sfDir, nQueries), k, grown.grownN,
+      nQueries.toLong)
+    val g = Actions.gauges(
+      "n_out" -> f.liveIds(spark, finalDir).agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, approx),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nOut != nBase + 2 * bSize)(
-        ("vector_count", (nBase + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("version_chain", 1L, vLast),
+      Actions.exactly("vector_count", grown.grownN, g("n_out").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
+  /** [[streamingAppend]] on the IVF family (`streaming_ivf_append`). */
   def streamingIvfAppend(spark: SparkSession, sfDir: String,
                          nQueries: Int = 10, k: Int = 10,
                          recallFloor: Double = 0.5,
-                         batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.AnnSearch
-    // `batchRows` > 0: deep×wide micro-batch shape + its own chain root
-    // (the [[streamingGraphAppend]] convention)
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-ivf-b$batchRows-v3"
-      else "stream-ivf-v3", "embeddings")
-    val landing = s"$root/landing"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = if (batchRows > 0L) math.min(batchRows, nBase) else nBase
-    // id-ceiling-windowed injection batches ([[AnnSearch.injectionBatch]]
-    // — collision-free on sparse blowup id spaces)
-    def shifted(k: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, k, delta, rows = batchRows)
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId)
-            .foreach { v =>
-              throw new IllegalStateException(
-                s"IVF root $root has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          AnnSearch.appendToIvfIndexAt(spark, baseDir, b.toDF(),
-            s"$root/v$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    // disk-committed streamed-corpus truth (shared with the sharded
-    // chain — identical corpus) + ONE action for the scalar checks
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = AnnSearch.searchIndexAt(spark, finalDir,
-      AnnSearch.fixtureQueries(spark, sfDir, nQueries), k,
-      AnnSearch.defaultProbe(spark, sfDir), expectedQ = nQueries.toLong)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> AnnSearch.ivfVectors(spark, finalDir)
-        .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val recall = g("hits") / g("n_exact")
-    val wantN = nBase + 2 * bSize
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nOut != wantN)(
-        ("vector_count", wantN.toDouble, nOut.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                         batchRows: Long = 0L): DataFrame =
+    streamingAppend(spark, sfDir, IndexFamily.Ivf, "stream-ivf", "v3", 1L,
+      nQueries, k, recallFloor, batchRows)
 
-  /** Streamed SHARDED ingest — the streaming twin of the sharded write
-    * path ([[graft.operators.ShardedSearch.appendToShards]]): each
-    * checkpointed micro-batch hash-routes its rows and every shard
+  /** [[streamingAppend]] on the graph family (`streaming_graph_append`). */
+  def streamingGraphAppend(spark: SparkSession, sfDir: String,
+                           nQueries: Int = 10, k: Int = 10,
+                           recallFloor: Double = 0.9,
+                           batchRows: Long = 0L): DataFrame =
+    streamingAppend(spark, sfDir, IndexFamily.Graph, "stream-graph", "v6",
+      5L, nQueries, k, recallFloor, batchRows)
+
+  /** A sharded chain's quality leg: its gauge frames, the check graded
+    * from their values, and the checkpoints to release afterwards.
+    */
+  private final case class Quality(gauges: Seq[(String, DataFrame)],
+                                   check: Map[String, Double] => Actions.Check,
+                                   release: Seq[DataFrame] = Nil)
+
+  /** Streamed SHARDED ingest, for either family — the streaming twin of
+    * the sharded write path ([[graft.operators.ShardedSearch.appendToShards]]):
+    * each checkpointed micro-batch hash-routes its rows and every shard
     * folds its slice into its OWN version chain,
-    * v_s(n) = appendToIvfIndexAt(v_s(n-1), slice_s(n)) — K independent
+    * v_s(n) = appendAt(v_s(n-1), slice_s(n)) — K independent
     * O(batch/K) appends per trigger, each under the single-index replay
-    * discipline (predecessor resolved below the batch id; a committed
-    * version above the batch id fails loudly; a replayed batch rewrites
-    * its own per-shard versions from the same predecessors, idempotent
-    * behind each manifest commit). At 100 TB this IS the ingest shape:
-    * the stream fans out to K writers that share nothing — no shard
-    * ever reads or locks another's chain.
+    * discipline ([[predecessor]]). At 100 TB this IS the ingest shape:
+    * the stream fans out to K writers that share nothing.
     *
     * Returns the zero-row violations contract:
     *
     *  - `version_chain` — every shard's chain reached v1 (two triggers);
     *  - `vector_count` — the K final versions together hold base + both
     *    batches;
-    *  - `shard_disjoint` — no vec_id indexed by two shards after the
-    *    stream (routing is a pure function of the id, so a replay or a
-    *    trigger split can never double-place a row);
-    *  - `scatter_gather_identity` — saturated scatter-gather over the K
-    *    final versions is BIT-IDENTICAL to the exact k-NN over the full
-    *    streamed corpus: the shard-merge theorem surviving a streamed
-    *    write history.
+    *  - `shard_disjoint` — no vec_id indexed by two shards (routing is a
+    *    pure function of the id, so a replay or a trigger split can
+    *    never double-place a row);
+    *  - the family's own quality leg over the K final versions and the
+    *    full streamed corpus: IVF's saturated scatter-gather is
+    *    BIT-IDENTICAL to the exact k-NN (`scatter_gather_identity`, the
+    *    shard-merge theorem surviving a streamed write history); a beam
+    *    has no saturation trick, so the graph's merged beam holds the
+    *    recall floor instead (`avg_recall`, the theorem's approximate
+    *    half). Batch sizes follow [[growth]]: the graph's fifth-of-corpus
+    *    trigger is an n/20 slice against an n/4 shard, squarely in the
+    *    incremental beam-link regime.
+    */
+  private def streamingShardAppend(spark: SparkSession, sfDir: String,
+                                   f: IndexFamily, prefix: String,
+                                   batchDiv: Long, nQueries: Int, k: Int,
+                                   batchRows: Long,
+                                   bases: Int => Seq[String])
+                                  (quality: (Growth, DataFrame, DataFrame,
+                                    Seq[String]) => Quality): DataFrame = {
+    val shards = ShardedSearch.DefaultShards
+    val root = IndexStore.indexDir(sfDir,
+      chainName(s"$prefix$shards", "v1", batchRows), "embeddings")
+    val grown = growth(spark, sfDir, batchDiv, batchRows)
+    def shardRoot(s: Int) = s"$root/s$s"
+    if (!(0 until shards).forall(s =>
+        latestVersion(shardRoot(s)).exists(_ >= 1L))) {
+      val baseDirs = bases(shards)
+      stageInto(grown.waves(0), s"$root/landing", "batch0")
+      stageInto(grown.waves(1), s"$root/landing", "batch1")
+      runChain(spark, s"$root/landing", VectorBatchSchema, s"$root/ckpt") {
+        (b, batchId) =>
+          (0 until shards).foreach { s =>
+            f.appendAt(spark,
+              predecessorDir(shardRoot(s), batchId, baseDirs(s)),
+              b.filter(ShardedSearch.shardOf(col("vec_id"), shards) === s),
+              s"${shardRoot(s)}/v$batchId")
+          }
+      }
+    }
+    val finals = (0 until shards).map { s =>
+      val v = latestVersion(shardRoot(s)).getOrElse(-1L)
+      (v, s"${shardRoot(s)}/v$v")
+    }
+    val ids = finals.map(v => f.liveIds(spark, v._2)).reduce(_ unionAll _)
+    val union = grownCorpus(spark, sfDir, grown.waves).localCheckpoint(true)
+    val leg = quality(grown, union,
+      AnnSearch.fixtureQueries(spark, sfDir, nQueries), finals.map(_._2))
+    val g = Actions.gauges(Seq(
+      "n_out" -> ids.agg(count(lit(1))),
+      "dups" -> ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1).agg(count(lit(1)))) ++ leg.gauges: _*)
+    (union +: leg.release).foreach(Checkpoints.release)
+    Actions.violations(spark,
+      Actions.exactly("version_chain", 0L, finals.count(_._1 != 1L)),
+      Actions.exactly("vector_count", grown.grownN, g("n_out").toLong),
+      Actions.exactly("shard_disjoint", 0L, g("dups").toLong),
+      leg.check(g))
+  }
+
+  /** [[streamingShardAppend]] on the IVF family
+    * (`streaming_shard_append`).
     */
   def streamingShardedAppend(spark: SparkSession, sfDir: String,
                              nQueries: Int = 10,
                              k: Int = 10,
-                             batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.squaredL2
-    import graft.operators.{AnnSearch, ShardedSearch, VectorSearch}
-    val shards = ShardedSearch.DefaultShards
-    // `batchRows` > 0: deep×wide micro-batch shape + its own chain root
-    // (the [[streamingGraphAppend]] convention)
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-shard$shards-b$batchRows-v1"
-      else s"stream-shard$shards-v1", "embeddings")
-    val landing = s"$root/landing"
-    def shifted(kk: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, kk, delta, rows = batchRows)
-    def shardRoot(s: Int) = s"$root/s$s"
-    if (!(0 until shards).forall(s =>
-        latestVersion(shardRoot(s)).exists(_ >= 1L))) {
-      val bases = ShardedSearch.buildShardedIvf(spark, sfDir, shards)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          (0 until shards).foreach { s =>
-            val sr = shardRoot(s)
-            latestVersion(sr).filter(_ > batchId).foreach { v =>
-              throw new IllegalStateException(
-                s"shard root $sr has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-            val baseDir = latestVersion(sr, limit = batchId)
-              .map(v => s"$sr/v$v").getOrElse(bases(s))
-            AnnSearch.appendToIvfIndexAt(spark, baseDir,
-              b.toDF().filter(
-                ShardedSearch.shardOf(col("vec_id"), shards) === s),
-              s"$sr/v$batchId")
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+                             batchRows: Long = 0L): DataFrame =
+    streamingShardAppend(spark, sfDir, IndexFamily.Ivf, "stream-shard", 1L,
+      nQueries, k, batchRows,
+      ShardedSearch.buildShardedIvf(spark, sfDir, _)) {
+      (_, union, queries, finals) =>
+        // the identity compares FULL rows (distance, rank), so the exact
+        // frame is a live checkpoint, not the pair-only committed truth
+        val exact = VectorSearch.topK(
+          union.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+            .select(col("query_id"), col("vec_id").as("id"),
+              squaredL2(col("qu"), col("v")).as("dist")), k)
+          .localCheckpoint(true)
+        val got = ShardedSearch.scatterGatherAt(spark, finals, queries,
+          union, k, nProbe = -1, expectedQ = nQueries.toLong)
+          .localCheckpoint(true)
+        Quality(Seq("diff" -> exact.exceptAll(got).select(lit(1L).as("one"))
+            .unionAll(got.exceptAll(exact).select(lit(1L).as("one")))
+            .agg(count(lit(1)))),
+          g => Actions.exactly("scatter_gather_identity", 0L,
+            g("diff").toLong),
+          Seq(exact, got))
     }
-    val finals = (0 until shards).map { s =>
-      val v = latestVersion(shardRoot(s)).getOrElse(-1L)
-      (v, s"${shardRoot(s)}/v$v")
-    }
-    val chainBad = finals.count(_._1 != 1L)
-    val ids = finals.map(f => AnnSearch.ivfVectors(spark, f._2)
-      .select(col("vec_id"))).reduce(_ unionAll _)
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = if (batchRows > 0L) math.min(batchRows, nBase) else nBase
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .localCheckpoint(true)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    // the identity leg compares FULL rows (distance, rank) so its exact
-    // frame stays a live checkpoint, not the pair-only committed truth
-    val exact = VectorSearch.topK(
-      union.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          squaredL2(col("qu"), col("v")).as("dist")), k)
-      .localCheckpoint(true)
-    val got = ShardedSearch.scatterGatherAt(spark, finals.map(_._2),
-      queries, union, k, nProbe = -1, expectedQ = nQueries.toLong)
-      .localCheckpoint(true)
-    // ONE action for the scalar checks (r17: was four sequential jobs)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> ids.agg(count(lit(1))),
-      "dups" -> ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).agg(count(lit(1))),
-      "diff" -> exact.exceptAll(got).select(lit(1L).as("one"))
-        .unionAll(got.exceptAll(exact).select(lit(1L).as("one")))
-        .agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val dups = g("dups").toLong
-    val diff = g("diff").toLong
-    graft.operators.Checkpoints.release(union)
-    graft.operators.Checkpoints.release(exact)
-    graft.operators.Checkpoints.release(got)
-    val viols = Seq(
-      Option.when(chainBad != 0)(
-        ("version_chain", 0.0, chainBad.toDouble)),
-      Option.when(nOut != nBase + 2 * bSize)(
-        ("vector_count", (nBase + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(dups != 0L)(
-        ("shard_disjoint", 0.0, dups.toDouble)),
-      Option.when(diff != 0L)(
-        ("scatter_gather_identity", 0.0, diff.toDouble))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
 
-  /** Streamed SHARDED ingest for the GRAPH family — the
-    * [[streamingShardedAppend]] contract on the beam topology: each
-    * checkpointed micro-batch hash-routes its rows and every graph
-    * shard beam-links its slice into its OWN version chain,
-    * v_s(n) = [[graft.operators.GraphAnn.appendToGraphIndexAt]](
-    * v_s(n-1), slice_s(n)) — K independent O(batch/K) appends per
-    * trigger, each under the single-index replay discipline. The
-    * per-trigger default (a fifth of the corpus, so an n/20 slice
-    * against an n/4 shard) keeps every shard append squarely in the
-    * INCREMENTAL beam-link regime a streamed ingest actually runs
-    * ([[graft.operators.GraphAnn.appendRebuilds]] — doubling-sized
-    * batches take the rebuild side, gated by
-    * `graph_append_violations`).
-    *
-    * Returns the zero-row violations contract:
-    *
-    *  - `version_chain` — every shard's chain reached v1 (two triggers);
-    *  - `vector_count` — the K final versions together hold base + both
-    *    batches;
-    *  - `shard_disjoint` — no vec_id indexed by two shards after the
-    *    stream (routing is a pure function of the id);
-    *  - `avg_recall` — the merged beam scatter-gather over the K final
-    *    versions holds the floor against the exact k-NN over the full
-    *    streamed corpus (a beam has no saturation trick, so the
-    *    streamed-write contract is the shard-merge theorem's
-    *    approximate half — the [[streamingGraphAppend]] convention).
+  /** [[streamingShardAppend]] on the graph family
+    * (`streaming_graph_shard_append`).
     */
   def streamingGraphShardedAppend(spark: SparkSession, sfDir: String,
                                   nQueries: Int = 10, k: Int = 10,
                                   recallFloor: Double = 0.9,
-                                  batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn, ShardedSearch}
-    val shards = ShardedSearch.DefaultShards
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-gshard$shards-b$batchRows-v1"
-      else s"stream-gshard$shards-v1", "embeddings")
-    val landing = s"$root/landing"
-    val nEmb = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize =
-      if (batchRows > 0L) math.min(batchRows, nEmb)
-      else math.max(1L, nEmb / 5L)
-    def shifted(kk: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, kk, delta, rows = bSize)
-    def shardRoot(s: Int) = s"$root/s$s"
-    if (!(0 until shards).forall(s =>
-        latestVersion(shardRoot(s)).exists(_ >= 1L))) {
-      val bases = ShardedSearch.buildShardedGraph(spark, sfDir, shards)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          (0 until shards).foreach { s =>
-            val sr = shardRoot(s)
-            latestVersion(sr).filter(_ > batchId).foreach { v =>
-              throw new IllegalStateException(
-                s"graph shard root $sr has committed version v$v > " +
-                  s"batch $batchId: checkpoint/root mismatch — " +
-                  "refusing to rewrite history")
-            }
-            val baseDir = latestVersion(sr, limit = batchId)
-              .map(v => s"$sr/v$v").getOrElse(bases(s))
-            GraphAnn.appendToGraphIndexAt(spark, baseDir,
-              b.toDF().filter(
-                ShardedSearch.shardOf(col("vec_id"), shards) === s),
-              s"$sr/v$batchId")
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+                                  batchRows: Long = 0L): DataFrame =
+    streamingShardAppend(spark, sfDir, IndexFamily.Graph, "stream-gshard",
+      5L, nQueries, k, batchRows,
+      ShardedSearch.buildShardedGraph(spark, sfDir, _)) {
+      (grown, union, queries, finals) =>
+        // the [[streamingAppend]] truth — identical corpus and tag
+        val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
+          nQueries, k, batchTag = s"-sinj${grown.bSize}")
+        val approx = ShardedSearch.scatterGatherGraphAt(spark, finals,
+          queries, union, k)
+        Quality(Seq("hits" -> Actions.hits(exact, approx),
+            "n_exact" -> exact.agg(count(lit(1)))),
+          g => Actions.atLeast("avg_recall", recallFloor,
+            g("hits") / g("n_exact")))
     }
-    val finals = (0 until shards).map { s =>
-      val v = latestVersion(shardRoot(s)).getOrElse(-1L)
-      (v, s"${shardRoot(s)}/v$v")
-    }
-    val chainBad = finals.count(_._1 != 1L)
-    val ids = finals.map(f =>
-      IndexStore.loadSegments(spark, f._2, "vectors")
-        .select(col("vec_id")).distinct()).reduce(_ unionAll _)
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .localCheckpoint(true)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    // disk-committed streamed-corpus truth (the [[streamingGraphAppend]]
-    // tag — identical corpus) + ONE action for the scalar checks
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = ShardedSearch.scatterGatherGraphAt(spark,
-      finals.map(_._2), queries, union, k)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> ids.agg(count(lit(1))),
-      "dups" -> ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val dups = g("dups").toLong
-    val recall = g("hits") / g("n_exact")
-    graft.operators.Checkpoints.release(union)
-    val viols = Seq(
-      Option.when(chainBad != 0)(
-        ("version_chain", 0.0, chainBad.toDouble)),
-      Option.when(nOut != nEmb + 2 * bSize)(
-        ("vector_count", (nEmb + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(dups != 0L)(
-        ("shard_disjoint", 0.0, dups.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
 
-  /** DELETE-AT-INGEST — the streaming twin of the batch tombstone gate
-    * (`index_delete_violations`): add/delete requests land as files in
-    * ONE stream (schema + `op` column), and each checkpointed micro-batch
-    * folds into a new O(batch) index version — adds through
-    * [[graft.operators.AnnSearch.appendToIvfIndexAt]], deletes through
-    * [[graft.operators.AnnSearch.deleteFromIvfIndexAt]] (a tombstone
-    * segment + manifest, never a corpus rewrite). A mixed batch chains
-    * add-then-delete through an intermediate `v<id>-stage` dir —
+  /** DELETE-AT-INGEST, for either family — the streaming twin of the
+    * batch tombstone gates (`index_delete_violations`,
+    * `graph_delete_violations`): add/delete requests land as files in
+    * ONE stream (schema + `op` column), and each checkpointed
+    * micro-batch folds into a new O(batch) version — adds through the
+    * family's append, deletes through its delete (ONE tombstone segment
+    * + manifest, never a corpus rewrite; graph tombstones stay
+    * TRAVERSABLE and are only excluded from ranking). A mixed batch
+    * chains add-then-delete through an intermediate `v<id>-stage` dir —
     * invisible to [[latestVersion]]'s `v\d+` match, so a half-committed
     * stage never serves — with the delete commit carrying the version
-    * name. Same replay discipline as [[ingestAvailable]]: predecessor
-    * resolved below the batch id, committed-version-above fails loudly,
-    * a replayed batch rewrites its own version deterministically
-    * (tombstone writes are Overwrite + manifest-last, idempotent like
-    * segment writes).
+    * name. Replay discipline is [[ingestAvailable]]'s ([[predecessor]]);
+    * tombstone writes are Overwrite + manifest-last, idempotent like
+    * segment writes.
     *
-    * The fixture streams batch 0 = brand-new vectors (the window-1
-    * id-ceiling injection — [[graft.operators.AnnSearch.injectionBatch]],
-    * collision-free on sparse blowup id spaces where the old fixed
-    * +50000 offset landed inside the corpus id range), batch 1 = delete
-    * every 2nd of them, through two micro-batches under
-    * one checkpoint. Returns the zero-row violations contract: rows
-    * appear if the chain is incomplete, the final live count is not
-    * base + adds − deletes, any deleted id surfaces in a snapshot
-    * search, or the final snapshot misses the recall floor against the
-    * exact k-NN over the live corpus.
+    * The fixture streams batch 0 = the first injection wave
+    * ([[growth]]), batch 1 = delete every 2nd of it. Per family: IVF's
+    * wave is the whole corpus and its batch 1 is deletes only (floor
+    * 0.5); the graph's wave is a fifth of the corpus and its batch 1 is
+    * genuinely MIXED — a second wave added in the same trigger — so the
+    * staged add-then-delete chaining executes in the fixture (floor
+    * 0.9). Returns the zero-row violations contract: rows appear if the
+    * chain is incomplete, the final live count is not base + waves −
+    * deletes, any deleted id surfaces in a search of the final version,
+    * or that search misses the recall floor against the exact k-NN
+    * over the live corpus.
     */
-  def streamingIvfDelete(spark: SparkSession, sfDir: String,
-                         nQueries: Int = 10, k: Int = 10,
-                         recallFloor: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.AnnSearch
-    val root = IndexStore.indexDir(sfDir, "stream-ivf-del-v2",
-      "embeddings")
+  private def streamingDelete(spark: SparkSession, sfDir: String,
+                              f: IndexFamily, name: String, batchDiv: Long,
+                              deltas: Seq[Double], exactTag: String,
+                              nQueries: Int, k: Int,
+                              recallFloor: Double): DataFrame = {
+    val root = IndexStore.indexDir(sfDir, name, "embeddings")
     val landing = s"$root/landing"
-    val adds = AnnSearch.injectionBatch(spark, sfDir, 1, 0.03)
-    val delIds = adds.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val reqSchema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("op", StringType)))
+    val grown = growth(spark, sfDir, batchDiv, 0L, deltas)
+    val delIds = grown.waves.head.select(col("vec_id"))
+      .filter(col("vec_id") % 2 === 0)
     if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
-      stageInto(adds.withColumn("op", lit("add")), landing, "batch0")
-      stageInto(delIds
-        .withColumn("v", lit(null).cast(ArrayType(DoubleType)))
-        .withColumn("op", lit("delete")), landing, "batch1")
-      // order-sensitive: batch1 tombstones ids batch0 ingests, and
-      // mtime resolution alone does not guarantee the delivery order
-      // (see [[staggerBatches]]) — a swapped order would tombstone
-      // not-yet-ingested ids
+      val base = f.base(spark, sfDir)
+      def op(df: DataFrame, o: String) = df.withColumn("op", lit(o))
+      stageInto(op(grown.waves.head, "add"), landing, "batch0")
+      stageInto((grown.waves.tail.map(op(_, "add")) :+ op(delIds
+          .withColumn("v", lit(null).cast(ArrayType(DoubleType))), "delete"))
+        .reduce(_ unionByName _), landing, "batch1")
+      // order-sensitive: batch1 tombstones ids batch0 ingests, and mtime
+      // resolution alone does not guarantee the delivery order
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(reqSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId).foreach { v =>
-            throw new IllegalStateException(
-              s"IVF root $root has committed version v$v > batch " +
-                s"$batchId: checkpoint/root mismatch — refusing to " +
-                "rewrite history")
-          }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          val batchAdds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("v"))
-          val batchDels = b.filter(col("op") === "delete")
-            .select(col("vec_id"))
-          // O(batch) emptiness probes on the micro-batch, not the corpus
-          val hasAdds = !batchAdds.isEmpty
-          val hasDels = !batchDels.isEmpty
-          val out = s"$root/v$batchId"
-          if (hasAdds && hasDels) {
-            val stage = s"$out-stage"
-            AnnSearch.appendToIvfIndexAt(spark, baseDir, batchAdds, stage)
-            AnnSearch.deleteFromIvfIndexAt(spark, stage, batchDels, out)
-          } else if (hasAdds)
-            AnnSearch.appendToIvfIndexAt(spark, baseDir, batchAdds, out)
-          else if (hasDels)
-            AnnSearch.deleteFromIvfIndexAt(spark, baseDir, batchDels, out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, VectorBatchSchema.add("op", StringType),
+          s"$root/ckpt") { (b, batchId) =>
+        val baseDir = predecessorDir(root, batchId, base)
+        val batchAdds = b.filter(col("op") === "add")
+          .select(col("vec_id"), col("v"))
+        val batchDels = b.filter(col("op") === "delete")
+          .select(col("vec_id"))
+        // O(batch) emptiness probes on the micro-batch, not the corpus
+        val hasAdds = !batchAdds.isEmpty
+        val hasDels = !batchDels.isEmpty
+        val out = s"$root/v$batchId"
+        if (hasAdds && hasDels) {
+          f.appendAt(spark, baseDir, batchAdds, s"$out-stage")
+          f.deleteAt(spark, s"$out-stage", batchDels, out)
+        } else if (hasAdds) f.appendAt(spark, baseDir, batchAdds, out)
+        else if (hasDels) f.deleteAt(spark, baseDir, batchDels, out)
+      }
     }
     val vLast = latestVersion(root).getOrElse(-1L)
     val finalDir = s"$root/v$vLast"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val res = AnnSearch.searchIndexAt(spark, finalDir, queries, k,
-      AnnSearch.defaultProbe(spark, sfDir), expectedQ = nQueries.toLong)
-    val live = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(adds.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    // disk-committed live-corpus truth + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17: was five jobs)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, live,
-      nQueries, k, batchTag = "-sivfdel")
-    val g = graft.operators.Actions.gauges(
+    val res = f.searchAt(spark, sfDir, finalDir,
+      AnnSearch.fixtureQueries(spark, sfDir, nQueries), k, grown.grownN,
+      nQueries.toLong)
+    // disk-committed live-corpus truth + ONE action for the checks
+    val exact = AnnSearch.appendUnionExact(spark, sfDir,
+      grownCorpus(spark, sfDir, grown.waves)
+        .join(delIds, Seq("vec_id"), "left_anti"),
+      nQueries, k, batchTag = exactTag)
+    val g = Actions.gauges(
       "n_del" -> delIds.agg(count(lit(1))),
-      "n_live" -> AnnSearch.ivfLiveVectors(spark, finalDir)
-        .agg(count(lit(1))),
+      "n_live" -> f.liveIds(spark, finalDir).agg(count(lit(1))),
       "deleted_in_results" -> res
         .join(delIds.select(col("vec_id").as("id")), Seq("id"),
           "left_semi").agg(count(lit(1))),
-      "hits" -> exact.join(res.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
+      "hits" -> Actions.hits(exact, res),
       "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val nLive = g("n_live").toLong
-    val deletedInResults = g("deleted_in_results").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    Actions.violations(spark,
+      Actions.exactly("version_chain", 1L, vLast),
+      Actions.exactly("live_count", grown.grownN - g("n_del").toLong,
+        g("n_live").toLong),
+      Actions.exactly("deleted_in_results", 0L,
+        g("deleted_in_results").toLong),
+      Actions.atLeast("avg_recall", recallFloor, g("hits") / g("n_exact")))
   }
 
-  /** DELETE-AT-INGEST on the GRAPH index chain — the graph-family twin
-    * of [[streamingIvfDelete]], closing the last lifecycle asymmetry
-    * between the three index families (flat and IVF have streamed
-    * delete legs; the graph chain had only appends + retention):
-    * add/delete requests land as files in ONE stream (schema + `op`
-    * column), and each checkpointed micro-batch folds into a new
-    * O(batch) graph version — adds through
-    * [[graft.operators.GraphAnn.appendToGraphIndexAt]] (beam-linked
-    * forward edges + reverse repair, manifest re-referencing the base
-    * segments), deletes through
-    * [[graft.operators.GraphAnn.deleteFromGraphIndex]] (ONE tombstone
-    * segment + manifest — the masked delete: tombstoned nodes stay
-    * TRAVERSABLE for navigation and are excluded only from ranking,
-    * so no graph data is touched). A mixed batch chains
-    * add-then-delete through an intermediate `v<id>-stage` dir
-    * (invisible to [[latestVersion]]'s `v\d+` match, so a
-    * half-committed stage never serves); replay discipline is
-    * [[ingestAvailable]]'s — predecessor resolved below the batch id,
-    * committed-version-above fails loudly, a replayed batch rewrites
-    * its own version deterministically behind the manifest gate.
-    *
-    * The fixture streams batch 0 = a fifth-of-corpus batch of new
-    * vectors (the window-1 id-ceiling injection,
-    * [[graft.operators.AnnSearch.injectionBatch]] — sized to the
-    * INCREMENTAL side of the append regime switch, which is what a
-    * streamed ingest is), batch 1 = a genuinely MIXED batch (the
-    * flat-store twin's discipline): delete every 2nd of wave 1 AND add
-    * a window-2 second wave in the same trigger — so the staged
-    * add-then-delete chaining (append to `v1-stage`, tombstone commit
-    * carries the version name) executes in the fixture rather than
-    * sitting as untested generality. Returns the zero-row violations
-    * contract: rows appear if the chain is incomplete, the final live
-    * count (vectors minus tombstones) is not base + both waves −
-    * deletes, any tombstoned id surfaces in a beam search of the final
-    * version, or that search misses the recall floor against the
-    * exact k-NN over the live corpus (floor at measured-minus-margin
-    * like the other graph gates).
-    */
+  /** [[streamingDelete]] on the IVF family (`streaming_index_delete`). */
+  def streamingIvfDelete(spark: SparkSession, sfDir: String,
+                         nQueries: Int = 10, k: Int = 10,
+                         recallFloor: Double = 0.5): DataFrame =
+    streamingDelete(spark, sfDir, IndexFamily.Ivf, "stream-ivf-del-v2", 1L,
+      Seq(0.03), "-sivfdel", nQueries, k, recallFloor)
+
+  /** [[streamingDelete]] on the graph family (`streaming_graph_delete`). */
   def streamingGraphDelete(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
-                           recallFloor: Double = 0.9): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn}
-    val root = IndexStore.indexDir(sfDir, "stream-graph-del-v2",
-      "embeddings")
-    val landing = s"$root/landing"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = math.max(1L, nBase / 5L)
-    val adds = AnnSearch.injectionBatch(spark, sfDir, 1, 0.03,
-      rows = bSize)
-    val adds2 = AnnSearch.injectionBatch(spark, sfDir, 2, 0.04,
-      rows = bSize)
-    val delIds = adds.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val reqSchema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("op", StringType)))
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      stageInto(adds.withColumn("op", lit("add")), landing, "batch0")
-      stageInto(adds2.withColumn("op", lit("add"))
-        .unionByName(delIds
-          .withColumn("v", lit(null).cast(ArrayType(DoubleType)))
-          .withColumn("op", lit("delete"))), landing, "batch1")
-      // order-sensitive: batch1's deletes target ids batch0 adds (and
-      // the spec pins the exact v0=add/v1=mixed shape) — stagger the
-      // staged mtimes so the file source cannot swap delivery
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(reqSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId).foreach { v =>
-            throw new IllegalStateException(
-              s"graph root $root has committed version v$v > batch " +
-                s"$batchId: checkpoint/root mismatch — refusing to " +
-                "rewrite history")
-          }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          val batchAdds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("v"))
-          val batchDels = b.filter(col("op") === "delete")
-            .select(col("vec_id"))
-          // O(batch) emptiness probes on the micro-batch, not the corpus
-          val hasAdds = !batchAdds.isEmpty
-          val hasDels = !batchDels.isEmpty
-          val out = s"$root/v$batchId"
-          if (hasAdds && hasDels) {
-            val stage = s"$out-stage"
-            GraphAnn.appendToGraphIndexAt(spark, baseDir, batchAdds,
-              stage)
-            GraphAnn.deleteFromGraphIndex(spark, stage, batchDels, out)
-          } else if (hasAdds)
-            GraphAnn.appendToGraphIndexAt(spark, baseDir, batchAdds, out)
-          else if (hasDels)
-            GraphAnn.deleteFromGraphIndex(spark, baseDir, batchDels, out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    // live = distinct vectors minus tombstones, both straight off the
-    // final version's manifest (merge-on-read, no resolution needed for
-    // a count)
-    val vecIds = IndexStore.loadSegments(spark, finalDir, "vectors")
-      .select("vec_id").distinct()
-    val tombSegs = IndexStore.manifestSegments(
-      IndexStore.readManifest(spark, finalDir), "tombstones")
-    val liveIds =
-      if (tombSegs.isEmpty) vecIds
-      else vecIds.join(
-        IndexStore.readUnion(spark, tombSegs).select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val nGrown = nBase + 2 * bSize
-    val ef = GraphAnn.autoEf(nGrown)
-    val hops = GraphAnn.autoHops(nGrown, GraphAnn.autoDegree(nBase))
-    val res = GraphAnn.graphSearchAt(spark, finalDir, queries, k, ef,
-      hops, expectedQ = nQueries.toLong)
-    val live = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(adds.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(adds2.select(col("vec_id"),
-        l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    // disk-committed live-corpus truth + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17: was five jobs;
-    // the beam above still runs its own internal jobs first)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, live,
-      nQueries, k, batchTag = "-sgdel")
-    val g = graft.operators.Actions.gauges(
-      "n_del" -> delIds.agg(count(lit(1))),
-      "n_live" -> liveIds.agg(count(lit(1))),
-      "deleted_in_results" -> res
-        .join(delIds.select(col("vec_id").as("id")), Seq("id"),
-          "left_semi").agg(count(lit(1))),
-      "hits" -> exact.join(res.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = nBase + 2 * bSize - nDel
-    val nLive = g("n_live").toLong
-    val deletedInResults = g("deleted_in_results").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                           recallFloor: Double = 0.9): DataFrame =
+    streamingDelete(spark, sfDir, IndexFamily.Graph, "stream-graph-del-v2",
+      5L, Seq(0.03, 0.04), "-sgdel", nQueries, k, recallFloor)
 
   /** DELETE through the FLAT mapping store — the reference's own store
     * shape (`main.py:119-126` LWW upsert keeps the old vector forever;
@@ -1549,23 +1181,13 @@ object StreamingIndex {
       // documented contract — make it deterministic rather than leaning
       // on filesystem mtime resolution
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val prevDir = if (batchId == 0L) s"$versions/base"
-                        else s"$versions/b${batchId - 1}"
-          Ingest.cdcLww(spark.read.parquet(prevDir).unionByName(b.toDF()))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, log.schema, s"$root/ckpt") { (b, batchId) =>
+        val prevDir = if (batchId == 0L) s"$versions/base"
+                      else s"$versions/b${batchId - 1}"
+        Ingest.cdcLww(spark.read.parquet(prevDir).unionByName(b))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId")
+      }
     }
     Ingest.cdcShape(spark.read.parquet(s"$versions/b1"))
   }
@@ -1617,42 +1239,28 @@ object StreamingIndex {
       stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
       // deterministic delivery order: the file source sorts by mtime
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val (base, prevMaxDoc) =
-            if (batchId == 0L) (0L, Long.MinValue)
-            else {
-              val r = spark.read
-                .parquet(s"$versions/b${batchId - 1}/state").head
-              (r.getLong(0), r.getLong(1))
-            }
-          val stats = b.agg(min(col("doc_id")), max(col("doc_id"))).head
-          val batchMaxDoc = if (stats.isNullAt(1)) prevMaxDoc
-            else stats.getLong(1)
-          if (!stats.isNullAt(0) && stats.getLong(0) <= prevMaxDoc)
-            throw new MisorderedBatchException(
-              s"packing batch $batchId out of order: min doc_id " +
-                s"${stats.getLong(0)} <= placed high-water $prevMaxDoc — " +
-                "refusing to commit a wrong-offset manifest")
-          val (placed, next) = TextAnalysis.packPlace(spark, b.toDF(), base)
-          placed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/rows")
-          Seq((next, batchMaxDoc)).toDF("next_offset", "max_doc")
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      try q.awaitTermination() catch {
-        case e: Throwable => wipeIfMisordered(root, e)
+      runChain(spark, landing, DocBatchSchema, s"$root/ckpt") { (b, batchId) =>
+        val (base, prevMaxDoc) =
+          if (batchId == 0L) (0L, Long.MinValue)
+          else {
+            val r = spark.read
+              .parquet(s"$versions/b${batchId - 1}/state").head
+            (r.getLong(0), r.getLong(1))
+          }
+        val stats = b.agg(min(col("doc_id")), max(col("doc_id"))).head
+        val batchMaxDoc = if (stats.isNullAt(1)) prevMaxDoc
+          else stats.getLong(1)
+        if (!stats.isNullAt(0) && stats.getLong(0) <= prevMaxDoc)
+          throw new MisorderedBatchException(
+            s"packing batch $batchId out of order: min doc_id " +
+              s"${stats.getLong(0)} <= placed high-water $prevMaxDoc — " +
+              "refusing to commit a wrong-offset manifest")
+        val (placed, next) = TextAnalysis.packPlace(spark, b, base)
+        placed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/rows")
+        Seq((next, batchMaxDoc)).toDF("next_offset", "max_doc")
+          .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
       }
     }
     TextAnalysis.packAggregate(
@@ -1675,7 +1283,7 @@ object StreamingIndex {
   def streamingChunkEmbed(spark: SparkSession, sfDir: String,
                           nQueries: Int = 10, k: Int = 10,
                           dim: Int = 16): DataFrame = {
-    import graft.operators.{TextAnalysis, VectorSearch}
+    import graft.operators.TextAnalysis
     val root = IndexStore.indexDir(sfDir, "stream-chunkemb-v1", "documents")
     val landing = s"$root/landing"
     val versions = s"$root/versions"
@@ -1686,29 +1294,17 @@ object StreamingIndex {
       stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
       stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          VectorSearch.textEmbed(
-              TextAnalysis.chunkTokens(b.toDF(),
-                  TextAnalysis.DefaultChunkSize,
-                  TextAnalysis.DefaultChunkStride)
-                .select((col("doc_id") * VectorSearch.ChunkKeyBase +
-                    col("chunk_ix"))
-                  .as("doc_id"), col("chunk_text").as("text")), dim)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/rows")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, DocBatchSchema, s"$root/ckpt") { (b, batchId) =>
+        VectorSearch.textEmbed(
+            TextAnalysis.chunkTokens(b,
+                TextAnalysis.DefaultChunkSize,
+                TextAnalysis.DefaultChunkStride)
+              .select((col("doc_id") * VectorSearch.ChunkKeyBase +
+                  col("chunk_ix"))
+                .as("doc_id"), col("chunk_text").as("text")), dim)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/rows")
+      }
     }
     val cEmb = spark.read.parquet(s"$versions/b*/rows")
     val qEmb = VectorSearch.textEmbed(
@@ -1745,30 +1341,20 @@ object StreamingIndex {
       stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
       stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
+      runChain(spark, landing, StructType(Seq(
+          StructField("doc_id", LongType),
           StructField("lang", StringType),
           StructField("source", StringType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val batchKeys = weightedKeys(b.toDF())
-          val pool =
-            if (batchId == 0L) batchKeys
-            else batchKeys.unionByName(
-              spark.read.parquet(s"$versions/b${batchId - 1}/state"))
-          weightedTopK(pool, k)
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+          StructField("text", StringType))), s"$root/ckpt") { (b, batchId) =>
+        val batchKeys = weightedKeys(b)
+        val pool =
+          if (batchId == 0L) batchKeys
+          else batchKeys.unionByName(
+            spark.read.parquet(s"$versions/b${batchId - 1}/state"))
+        weightedTopK(pool, k)
+          .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
+      }
     }
     spark.read.parquet(s"$versions/b1/state").orderBy("doc_id")
   }
@@ -1806,55 +1392,43 @@ object StreamingIndex {
       stageInto(e.filter(col("us") <= cut), landing, "batch0")
       stageInto(e.filter(col("us") > cut), landing, "batch1")
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("event_id", LongType),
+      runChain(spark, landing, StructType(Seq(
+          StructField("event_id", LongType),
           StructField("user_id", LongType),
           StructField("event_type", StringType),
           StructField("us", LongType),
-          StructField("value", DoubleType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val (prevTail, prevHigh) =
-            if (batchId == 0L)
-              (spark.createDataFrame(
-                 spark.sparkContext.emptyRDD[Row], b.schema),
-               Long.MinValue)
-            else {
-              val st = spark.read.parquet(s"$versions/b${batchId - 1}/state")
-              (st.drop("high_us"),
-               st.agg(max(col("high_us"))).head.getLong(0))
-            }
-          val stats = b.agg(min(col("us")), max(col("us"))).head
-          if (!stats.isNullAt(0) && stats.getLong(0) <= prevHigh)
-            throw new MisorderedBatchException(
-              s"anomaly batch $batchId out of order: min us " +
-                s"${stats.getLong(0)} <= scored high-water $prevHigh — " +
-                "refusing to score against a wrong tail")
-          val high = if (stats.isNullAt(1)) prevHigh else stats.getLong(1)
-          val ctx = prevTail.unionByName(b.toDF())
-          val batchIds = b.select(col("event_id").as("bid"))
-          graft.operators.Events.anomaliesOver(ctx, w)
-            .join(batchIds, col("event_id") === col("bid"), "left_semi")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/flags")
-          val tw = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("us").desc, col("event_id").desc)
-          ctx.withColumn("rn", row_number().over(tw))
-            .filter(col("rn") <= w).drop("rn")
-            .withColumn("high_us", lit(high))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      try q.awaitTermination() catch {
-        case e: Throwable => wipeIfMisordered(root, e)
+          StructField("value", DoubleType))), s"$root/ckpt") { (b, batchId) =>
+        val (prevTail, prevHigh) =
+          if (batchId == 0L)
+            (spark.createDataFrame(
+               spark.sparkContext.emptyRDD[Row], b.schema),
+             Long.MinValue)
+          else {
+            val st = spark.read.parquet(s"$versions/b${batchId - 1}/state")
+            (st.drop("high_us"),
+             st.agg(max(col("high_us"))).head.getLong(0))
+          }
+        val stats = b.agg(min(col("us")), max(col("us"))).head
+        if (!stats.isNullAt(0) && stats.getLong(0) <= prevHigh)
+          throw new MisorderedBatchException(
+            s"anomaly batch $batchId out of order: min us " +
+              s"${stats.getLong(0)} <= scored high-water $prevHigh — " +
+              "refusing to score against a wrong tail")
+        val high = if (stats.isNullAt(1)) prevHigh else stats.getLong(1)
+        val ctx = prevTail.unionByName(b)
+        val batchIds = b.select(col("event_id").as("bid"))
+        graft.operators.Events.anomaliesOver(ctx, w)
+          .join(batchIds, col("event_id") === col("bid"), "left_semi")
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/flags")
+        val tw = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("us").desc, col("event_id").desc)
+        ctx.withColumn("rn", row_number().over(tw))
+          .filter(col("rn") <= w).drop("rn")
+          .withColumn("high_us", lit(high))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
       }
     }
     spark.read.parquet(s"$versions/b*/flags").orderBy("event_id")
@@ -1895,43 +1469,31 @@ object StreamingIndex {
       stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
       stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
       staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val agg = new MisraGriesAgg(m)
-          val prev: MgBuf =
-            if (batchId == 0L) agg.zero
-            else {
-              val rows = spark.read
-                .parquet(s"$versions/b${batchId - 1}/state").collect()
-              (rows.filter(!_.isNullAt(0))
-                 .map(r => r.getString(0) -> r.getLong(1)).toMap,
-               rows.head.getLong(2))
-            }
-          val batchSketch: MgBuf = b
-            .select(explode(split(col("text"), " ")).as("tok"))
-            .filter(col("tok") =!= "")
-            .select(lower(col("tok")).as("tok"))
-            .as[String]
-            .select(agg.toColumn).head()
-          val (cnt, n) = agg.merge(prev, batchSketch)
-          val out =
-            if (cnt.isEmpty) Seq((null: String, 0L, n))
-            else cnt.toSeq.map { case (t, c) => (t, c, n) }
-          out.toDF("tok", "cnt", "n")
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, DocBatchSchema, s"$root/ckpt") { (b, batchId) =>
+        val agg = new MisraGriesAgg(m)
+        val prev: MgBuf =
+          if (batchId == 0L) agg.zero
+          else {
+            val rows = spark.read
+              .parquet(s"$versions/b${batchId - 1}/state").collect()
+            (rows.filter(!_.isNullAt(0))
+               .map(r => r.getString(0) -> r.getLong(1)).toMap,
+             rows.head.getLong(2))
+          }
+        val batchSketch: MgBuf = b
+          .select(explode(split(col("text"), " ")).as("tok"))
+          .filter(col("tok") =!= "")
+          .select(lower(col("tok")).as("tok"))
+          .as[String]
+          .select(agg.toColumn).head()
+        val (cnt, n) = agg.merge(prev, batchSketch)
+        val out =
+          if (cnt.isEmpty) Seq((null: String, 0L, n))
+          else cnt.toSeq.map { case (t, c) => (t, c, n) }
+        out.toDF("tok", "cnt", "n")
+          .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
+      }
     }
     val st = spark.read.parquet(s"$versions/b1/state")
     val cands = st.filter(col("tok").isNotNull).select(col("tok"))
@@ -1965,7 +1527,6 @@ object StreamingIndex {
     */
   def streamingDrift(spark: SparkSession, sfDir: String, nBins: Int = 10,
                      eps: Double = 0.5): DataFrame = {
-    import graft.operators.VectorSearch
     // parameters ride IN the fixture key (repo convention, e.g.
     // "ivfdoc$nc-$dim-v1"): a non-default (nBins, eps) call must never
     // be served a committed default-parameter result
@@ -1992,192 +1553,103 @@ object StreamingIndex {
       val ckptPath = new Path(s"$root/ckpt")
       val fs = ckptPath.getFileSystem(IndexStore.hadoopConf)
       if (fs.exists(ckptPath)) fs.delete(ckptPath, true)
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         _: Long) =>
-          IndexStore.saveDataset(
-            VectorSearch.psiVsReference(spark.read.parquet(refPath),
-              VectorSearch.driftCells(b.toDF()), nBins, eps)
-              .coalesce(1), outPath)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, VectorBatchSchema, s"$root/ckpt") { (b, _) =>
+        IndexStore.saveDataset(
+          VectorSearch.psiVsReference(spark.read.parquet(refPath),
+            VectorSearch.driftCells(b), nBins, eps)
+            .coalesce(1), outPath)
+      }
     }
     spark.read.parquet(outPath).orderBy("dim")
   }
 
-  /** RETENTION as a gated query — the last lifecycle event
-    * (build → append → delete → compact → refit → RETENTION) surfaced in
-    * the graded contract. [[pruneVersions]] is the production surface (a
-    * long-running ingest otherwise accumulates every snapshot ever
-    * written); this gate proves the refcounting end-to-end on a real
-    * chain: three O(batch) appends over the fixture IVF base (versions
-    * v0 → v1 → v2, each manifest re-referencing its predecessor's
-    * segments IN PLACE — so v0's segment files are live data of v1 and
-    * v2), then one `keep = 2` vacuum. The prune must (a) remove exactly
-    * v0 and nothing else, (b) leave v0 unresolvable as a VERSION while
-    * every segment a surviving manifest references stays on disk —
-    * refcounting, not directory deletion, (c) leave the latest version's
-    * search bit-identical (top-k ties break on (dist, id), so equality
-    * is exact, not floor-gated), and (d) be idempotent — a second vacuum
-    * finds nothing. Outcomes are persisted once per data fingerprint
-    * (the prune is a destructive one-shot; a re-run in a fresh JVM must
-    * grade the SAME event, not a differently-shaped steady state), and
-    * the serving check is recomputed live on every invocation.
+  /** RETENTION as a gated query, for either family — the last
+    * lifecycle event (build → append → delete → compact → refit →
+    * RETENTION) surfaced in the graded contract. [[pruneVersions]] is
+    * the production surface (a long-running ingest otherwise
+    * accumulates every snapshot ever written); this gate proves its
+    * layout-agnostic refcounting end-to-end on a real chain: three
+    * O(batch) appends over the family's fixture base (v0 → v1 → v2,
+    * each manifest re-referencing its predecessor's segments IN PLACE —
+    * so v0's segment files are live data of v1 and v2), then one
+    * `keep = 2` vacuum. The prune must (a) remove exactly v0 and nothing
+    * else, (b) leave v0 unresolvable as a VERSION while every segment a
+    * surviving manifest references stays on disk — including the base
+    * index's segments outside the root (refcounting, not directory
+    * deletion), (c) leave the latest version's search identical (top-k
+    * ties break on (dist, id), so equality is exact, not floor-gated),
+    * and (d) be idempotent — a second vacuum finds nothing. Outcomes
+    * are persisted once per data fingerprint (the prune is a
+    * destructive one-shot; a re-run in a fresh JVM must grade the SAME
+    * event), and the serving check is recomputed live on every
+    * invocation. `name` carries (nQueries, k): the persisted outcomes
+    * were graded at THOSE parameters, and mixing them with a live
+    * serving check at different ones would blend two contracts.
     */
-  def ivfRetentionViolations(spark: SparkSession, sfDir: String,
-                             nQueries: Int = 10, k: Int = 10): DataFrame = {
-    import spark.implicits._
-    import graft.operators.AnnSearch
-    // (nQueries, k) ride in the key: the persisted one-shot outcomes
-    // were graded at THESE parameters, and mixing them with a live
-    // serving check at different ones would blend two contracts
-    val root = IndexStore.indexDir(sfDir, s"ivf-ret-$nQueries-$k-v2",
-      "embeddings")
+  private def retentionViolations(spark: SparkSession, sfDir: String,
+                                  f: IndexFamily, name: String,
+                                  nQueries: Int, k: Int): DataFrame = {
+    val root = IndexStore.indexDir(sfDir, name, "embeddings")
     val outcome = s"$root/outcome"
     val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val probe = AnnSearch.defaultProbe(spark, sfDir)
+    val grownN = 4 * AnnSearch.embeddingCount(spark, sfDir)
+    def searchAt(v: Long) = f.searchAt(spark, sfDir, s"$root/v$v", queries,
+      k, grownN, nQueries.toLong).select(col("query_id"), col("id"))
     if (!IndexStore.committed(outcome)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
-      // id-ceiling-windowed injections ([[AnnSearch.injectionBatch]])
-      def shifted(k: Int, delta: Double) =
-        AnnSearch.injectionBatch(spark, sfDir, k, delta)
-      AnnSearch.appendToIvfIndexAt(spark, base,
-        shifted(1, 0.04), s"$root/v0")
-      AnnSearch.appendToIvfIndexAt(spark, s"$root/v0",
-        shifted(2, 0.05), s"$root/v1")
-      AnnSearch.appendToIvfIndexAt(spark, s"$root/v1",
-        shifted(3, 0.06), s"$root/v2")
-      val pre = AnnSearch.searchIndexAt(spark, s"$root/v2", queries, k,
-        probe, expectedQ = nQueries.toLong)
-        .select(col("query_id"), col("id")).localCheckpoint(true)
+      Seq(0.04, 0.05, 0.06).zipWithIndex
+        .foldLeft(f.base(spark, sfDir)) { case (prev, (d, v)) =>
+          f.appendAt(spark, prev,
+            AnnSearch.injectionBatch(spark, sfDir, v + 1, d), s"$root/v$v")
+          s"$root/v$v"
+        }
+      val pre = searchAt(2L).localCheckpoint(true)
       val fs = new Path(root).getFileSystem(IndexStore.hadoopConf)
       def qualify(s: String): String =
         fs.makeQualified(new Path(s)).toString
       // what the SURVIVORS reference — captured before the prune so the
-      // liveness check is against the prune's own input, incl. v0's
-      // segment (re-referenced by v1/v2: must survive its version's
-      // death) and the base index's segments outside `root`
+      // liveness check is against the prune's own input
       val live = Seq(1L, 2L)
         .flatMap(v => IndexStore.readManifest(spark, s"$root/v$v"))
         .map(e => qualify(e._2)).distinct
       val doomed = pruneVersions(spark, root, keep = 2)
-      val post = AnnSearch.searchIndexAt(spark, s"$root/v2", queries, k,
-        probe, expectedQ = nQueries.toLong)
-        .select(col("query_id"), col("id"))
+      val post = searchAt(2L)
       val drift = post.exceptAll(pre).count() + pre.exceptAll(post).count()
-      IndexStore.saveDataset(Seq(
-        ("pruned_exactly_v0", 1.0,
-          if (doomed == Seq(0L)) 1.0 else 0.0),
-        ("doomed_still_resolvable", 0.0,
-          (if (IndexStore.committed(s"$root/v0/manifest")) 1L else 0L)
-            .toDouble),
-        ("live_segment_missing", 0.0,
-          live.count(p => !fs.exists(new Path(p))).toDouble),
-        ("post_prune_drift", 0.0, drift.toDouble),
-        ("prune_idempotent", 0.0,
-          pruneVersions(spark, root, keep = 2).size.toDouble))
-        .toDF("invariant", "expected", "actual").coalesce(1), outcome)
+      IndexStore.saveDataset(Actions.checkRows(spark, Seq(
+        Actions.holds("pruned_exactly_v0", doomed == Seq(0L)),
+        Actions.exactly("doomed_still_resolvable", 0L,
+          if (IndexStore.committed(s"$root/v0/manifest")) 1L else 0L),
+        Actions.exactly("live_segment_missing", 0L,
+          live.count(p => !fs.exists(new Path(p)))),
+        Actions.exactly("post_prune_drift", 0L, drift),
+        Actions.exactly("prune_idempotent", 0L,
+          pruneVersions(spark, root, keep = 2).size))).coalesce(1), outcome)
     }
     // persisted one-shot outcomes + the recomputed serving check: the
     // surviving chain must still answer the fixture queries in full
-    val persisted = spark.read.parquet(outcome)
-      .filter(col("expected") =!= col("actual"))
     val vLast = latestVersion(root).getOrElse(-1L)
-    val nRes =
-      if (vLast < 0L) -1L
-      else AnnSearch.searchIndexAt(spark, s"$root/v$vLast", queries, k,
-        probe, expectedQ = nQueries.toLong).count()
-    val current = Seq(
-      Option.when(vLast != 2L)(
-        ("latest_version", 2.0, vLast.toDouble)),
-      Option.when(nRes != nQueries.toLong * k)(
-        ("serving_rows", nQueries.toDouble * k, nRes.toDouble))).flatten
-    persisted
-      .unionByName(current.toDF("invariant", "expected", "actual"))
+    val nRes = if (vLast < 0L) -1L else searchAt(vLast).count()
+    spark.read.parquet(outcome)
+      .filter(col("expected") =!= col("actual"))
+      .unionByName(Actions.violations(spark,
+        Actions.exactly("latest_version", 2L, vLast),
+        Actions.exactly("serving_rows", nQueries.toLong * k, nRes)))
       .orderBy("invariant")
   }
 
-  /** RETENTION for the GRAPH chain — [[ivfRetentionViolations]]'
-    * contract on the graph family's manifested versions (the
-    * [[pruneVersions]] refcounting vacuum is layout-agnostic; this gate
-    * proves that on the k-NN-graph chain): three O(batch) graph appends
-    * build v0→v1→v2, the keep-2 prune must doom EXACTLY v0 while every
-    * segment any survivor references lives on (v0's delta segments are
-    * re-referenced by v1/v2 and must survive their version's death, as
-    * must the base index's segments outside the root), the surviving
-    * head must answer the fixture queries IDENTICALLY before and after
-    * the prune, and the prune must be idempotent. One-shot outcomes
-    * persist at prune time; the serving check recomputes per call.
+  /** [[retentionViolations]] on the IVF chain
+    * (`index_retention_violations`).
+    */
+  def ivfRetentionViolations(spark: SparkSession, sfDir: String,
+                             nQueries: Int = 10, k: Int = 10): DataFrame =
+    retentionViolations(spark, sfDir, IndexFamily.Ivf,
+      s"ivf-ret-$nQueries-$k-v2", nQueries, k)
+
+  /** [[retentionViolations]] on the graph chain
+    * (`graph_retention_violations`).
     */
   def graphRetentionViolations(spark: SparkSession, sfDir: String,
                                nQueries: Int = 10,
-                               k: Int = 10): DataFrame = {
-    import spark.implicits._
-    import graft.operators.{AnnSearch, GraphAnn}
-    val root = IndexStore.indexDir(sfDir, s"graph-ret-$nQueries-$k-v4",
-      "embeddings")
-    val outcome = s"$root/outcome"
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val n = AnnSearch.embeddingCount(spark, sfDir)
-    val hops = GraphAnn.autoHops(4 * n, GraphAnn.autoDegree(n))
-    def searchAt(v: Long) =
-      GraphAnn.graphSearchAt(spark, s"$root/v$v", queries, k,
-        GraphAnn.autoEf(4 * n), hops)
-    if (!IndexStore.committed(outcome)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      // id-ceiling-windowed injections ([[AnnSearch.injectionBatch]])
-      def shifted(k: Int, delta: Double) =
-        AnnSearch.injectionBatch(spark, sfDir, k, delta)
-      GraphAnn.appendToGraphIndexAt(spark, base,
-        shifted(1, 0.04), s"$root/v0")
-      GraphAnn.appendToGraphIndexAt(spark, s"$root/v0",
-        shifted(2, 0.05), s"$root/v1")
-      GraphAnn.appendToGraphIndexAt(spark, s"$root/v1",
-        shifted(3, 0.06), s"$root/v2")
-      val pre = searchAt(2L)
-        .select(col("query_id"), col("id")).localCheckpoint(true)
-      val fs = new Path(root).getFileSystem(IndexStore.hadoopConf)
-      def qualify(s: String): String =
-        fs.makeQualified(new Path(s)).toString
-      val live = Seq(1L, 2L)
-        .flatMap(v => IndexStore.readManifest(spark, s"$root/v$v"))
-        .map(e => qualify(e._2)).distinct
-      val doomed = pruneVersions(spark, root, keep = 2)
-      val post = searchAt(2L).select(col("query_id"), col("id"))
-      val drift = post.exceptAll(pre).count() + pre.exceptAll(post).count()
-      IndexStore.saveDataset(Seq(
-        ("pruned_exactly_v0", 1.0,
-          if (doomed == Seq(0L)) 1.0 else 0.0),
-        ("doomed_still_resolvable", 0.0,
-          (if (IndexStore.committed(s"$root/v0/manifest")) 1L else 0L)
-            .toDouble),
-        ("live_segment_missing", 0.0,
-          live.count(p => !fs.exists(new Path(p))).toDouble),
-        ("post_prune_drift", 0.0, drift.toDouble),
-        ("prune_idempotent", 0.0,
-          pruneVersions(spark, root, keep = 2).size.toDouble))
-        .toDF("invariant", "expected", "actual").coalesce(1), outcome)
-    }
-    val persisted = spark.read.parquet(outcome)
-      .filter(col("expected") =!= col("actual"))
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val nRes = if (vLast < 0L) -1L else searchAt(vLast).count()
-    val current = Seq(
-      Option.when(vLast != 2L)(
-        ("latest_version", 2.0, vLast.toDouble)),
-      Option.when(nRes != nQueries.toLong * k)(
-        ("serving_rows", nQueries.toDouble * k, nRes.toDouble))).flatten
-    persisted
-      .unionByName(current.toDF("invariant", "expected", "actual"))
-      .orderBy("invariant")
-  }
+                               k: Int = 10): DataFrame =
+    retentionViolations(spark, sfDir, IndexFamily.Graph,
+      s"graph-ret-$nQueries-$k-v4", nQueries, k)
 }

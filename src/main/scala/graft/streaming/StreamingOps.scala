@@ -48,6 +48,13 @@ object StreamingOps extends Serializable {
       spark.readStream.schema(schema).parquet(stageEventsDir(sfDir)))
   }
 
+  /** Where [[runToMemory]] puts its throwaway checkpoints. */
+  private[graft] def ephemeralCkptBase: String =
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_TMPDIR",
+      if (java.nio.file.Files.isWritable(
+          java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
+      else System.getProperty("java.io.tmpdir"))
+
   /** Run a streaming frame to completion against a memory sink and return
     * the resulting table. `statePartitions` pins
     * `spark.sql.shuffle.partitions` for the query's lifetime — stateful
@@ -60,7 +67,6 @@ object StreamingOps extends Serializable {
                           statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
     def run(): Unit = {
-      val t0 = System.nanoTime()
       // Ephemeral checkpoint on tmpfs when present (r18, guide §6 I/O):
       // a memory-sink replay's checkpoint is throwaway by definition —
       // Spark itself puts it in a deleted-on-stop temp dir — but the
@@ -73,27 +79,17 @@ object StreamingOps extends Serializable {
       // streamed index chains) pass their own real checkpointLocation
       // and are untouched; SPARK_GRAFT_STREAM_TMPDIR overrides the
       // placement for boxes where /dev/shm is absent or off-limits.
-      val ckptBase = sys.env.getOrElse("SPARK_GRAFT_STREAM_TMPDIR",
-        if (java.nio.file.Files.isWritable(
-            java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-        else System.getProperty("java.io.tmpdir"))
       val ckpt = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(ckptBase), s"graft_ckpt_$name").toString
-      val q = df.writeStream.outputMode(mode).format("memory")
-        .queryName(name).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally {
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-          System.err.println(f"[stream] $name start->drained " +
-            f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream] $name batch ${p.batchId} " +
-              s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-          }
-        }
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(ckpt))
-      }
+        java.nio.file.Paths.get(ephemeralCkptBase), s"graft_ckpt_$name")
+        .toString
+      // the ephemeral checkpoint goes on every exit path, a throwing
+      // start() or stop() included
+      try {
+        val q = df.writeStream.outputMode(mode).format("memory")
+          .queryName(name).option("checkpointLocation", ckpt).start()
+        try q.processAllAvailable() finally q.stop()
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(ckpt))
     }
     statePartitions match {
       case None => run() // no conf touched on the default path

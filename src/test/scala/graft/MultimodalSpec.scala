@@ -20,6 +20,24 @@ class MultimodalSpec extends SparkSpec {
       png(3) == 'G')
   }
 
+  test("the media fixture build runs under generated code only") {
+    // CODEGEN_ONLY turns a silent fallback to interpreted projections
+    // (e.g. generated code that cannot reach the row class's accessors)
+    // into a failure
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val rows = Multimodal.buildMediaTable(spark, sf).collect()
+      assert(rows.length == Tables.load(spark, sf, "documents").count())
+      assert(rows.forall(r => r.getAs[Array[Byte]]("content").nonEmpty))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   test("decodeOne round-trips the encoder through a REAL ImageIO parse") {
     // encode → decode must recover the arithmetic geometry exactly; a
     // header-only or hash-derived "decode" cannot produce these checksums

@@ -225,6 +225,36 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("phraseSearch on an all-distinct corpus resolves the count-1 tie " +
+    "to the lexicographically smallest gram") {
+    import spark.implicits._
+    // every trigram occurs once, so every gram ties at the max count;
+    // doc 4's only window holds an empty token (double space)
+    val docs = Seq(
+      1L -> "zeta yak xray walrus",
+      2L -> "mango apple kiwi lemon",
+      3L -> "banana apple cherry",
+      4L -> "kiwi  melon")
+    val grams = for {
+      (id, text) <- docs
+      (w, pos) <- text.split(" ", -1).sliding(3).zipWithIndex
+      if w.length == 3 && w.forall(_.nonEmpty)
+    } yield (w.mkString(" "), id, pos.toLong)
+    assert(grams.map(_._1).distinct.size == grams.size)
+    val best = grams.map(_._1).min
+    val want = grams.filter(_._1 == best)
+      .groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (id, os) => Seq(id, os.size.toLong, os.map(_._3).min) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_phrase")
+      .toString
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = TextSearch.phraseSearch(spark, dir).collect().map(_.toSeq)
+      assert(got.toSeq == want)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
+
   test("ngramNovelty: bounded in [0,1], the first doc is all-new, and " +
     "per-doc new counts sum to the corpus's distinct shingle count") {
     val rows = TextAnalysis.ngramNovelty(spark, sf).collect()

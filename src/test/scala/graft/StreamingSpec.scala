@@ -69,12 +69,18 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup equals the batch distinct key set") {
+    def ckpts = Option(new java.io.File(StreamingOps.ephemeralCkptBase)
+        .list()).toSeq.flatten
+      .filter(_.startsWith("graft_ckpt_graft_stream_dedup")).toSet
+    val before = ckpts
     val got = StreamingOps.streamingDedup(spark, sf)
       .collect().map(_.toSeq).toSet
     val want = Tables.events(spark, sf)
       .select(col("user_id"), col("event_type")).distinct()
       .collect().map(_.toSeq).toSet
     assert(got == want)
+    // the run's ephemeral checkpoint dir is gone once it returns
+    assert((ckpts -- before).isEmpty)
   }
 
   test("streaming CDC fold reaches the batch apply's exact live set") {
@@ -806,5 +812,34 @@ class StreamingSpec extends SparkSpec {
     assert(msgs.contains("checkpoint/root mismatch"))
     // and the refused batch rewrote nothing: v5 is still the latest
     assert(StreamingIndex.latestVersion(root).contains(5L))
+  }
+
+  test("the IVF append chain refuses a fresh checkpoint over an older " +
+      "root") {
+    import graft.operators.IndexFamily
+    import graft.sources.IndexStore
+    import graft.streaming.StreamingIndex
+    // the vector chains share ingestAvailable's runner and guard: a
+    // committed v5 under a fresh checkpoint must refuse, not fold
+    // batch 0 from the base
+    val root = Files.createTempDirectory("graft_ivf_ckpt_mismatch").toString
+    IndexStore.saveDataset(Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "v"),
+      s"$root/v5/vectors")
+    IndexStore.writeManifest(spark, s"$root/v5",
+      Seq(("vectors", s"$root/v5/vectors", 5L)))
+    assert(StreamingIndex.latestVersion(root).contains(5L))
+    Seq((2L, Seq(0.0, 1.0))).toDF("vec_id", "v").coalesce(1)
+      .write.parquet(s"$root/landing")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingIndex.appendChain(spark, IndexFamily.Ivf, root,
+        base = s"$root/v5")
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      .mkString(" | ")
+    assert(msgs.contains("checkpoint/root mismatch"))
+    assert(StreamingIndex.latestVersion(root).contains(5L))
+    assert(!new java.io.File(s"$root/v0").exists)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }
